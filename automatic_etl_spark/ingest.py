@@ -163,18 +163,18 @@ def ingest_many(
 
     ``sources[name] = (df, target_path, spec)``. Returns the Q6-style
     status report; failed tables appear with their error, successful
-    ones with their audit rows.
+    ones with their audit rows. The audit rows are collected inside
+    the table's phase, so a failing audit gets the phase's retries and
+    fails only its own table.
     """
     from automatic_etl_spark.orchestrator import Orchestrator, Phase, status_report
-
-    audits: dict[str, DataFrame] = {}
 
     def make_phase(name: str):
         df, target, spec = sources[name]
 
         def run(_):
-            audits[name] = ingest_table(spark, df, target, spec)
-            return audits[name]
+            audit = ingest_table(spark, df, target, spec)
+            return [row.asDict() for row in audit.collect()]
 
         return Phase(f"ingest_{name}", run, max_retries=2)
 
@@ -184,7 +184,8 @@ def ingest_many(
     results = dag.run(spark, max_workers=max_workers)
     report = status_report(results)
     report["tables"] = {
-        name: [row.asDict() for row in audit.collect()]
-        for name, audit in audits.items()
+        name: results[f"ingest_{name}"].output
+        for name in sources
+        if results[f"ingest_{name}"].status == "success"
     }
     return report

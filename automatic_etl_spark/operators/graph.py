@@ -31,16 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from automatic_etl_spark.operators.checkpoints import (
-    release as checkpoints_release,
-)
-
-
-# Public home: operators/checkpoints.release (r15 — promoted per r14
-# ADVICE so the version-brittle reflection lives in exactly one
-# module); the private alias stays because round-14 A/B tooling
-# (tools/ab_interleaved.py) and historical docs reference it.
-_release_checkpoint = checkpoints_release
+from automatic_etl_spark.operators.checkpoints import release
 
 
 def connected_components(
@@ -52,7 +43,6 @@ def connected_components(
     max_iter: int = 20,
     compress: bool = False,
     stats: dict | None = None,
-    delta_frontier: bool = False,
 ) -> DataFrame:
     """Label every node with its component's MINIMUM node id.
 
@@ -77,22 +67,9 @@ def connected_components(
     at the fixpoint, where every label is already the component min,
     so the hook-only convergence probe remains exact).
 
-    ``delta_frontier=True`` joins only the CHANGED labels (last
-    round's frontier) against the edge blocks instead of the full
-    label table — sound because after round k every node's label ≤
-    every neighbor's round-(k-1) label, so an unchanged neighbor can
-    never win a later min (round 1's frontier is all nodes; with
-    compress, jump-lowered labels are tracked into the frontier too).
-    Measured and left OFF by default (r15 A/B,
-    bench_baselines/ab_cc_delta_r15.jsonl): on the near-dup fixture
-    graphs it ran +3…+9% slower at BOTH sf0.1 and the 10× stress
-    corpus — these graphs converge in ~3 rounds with round 1 doing
-    almost all the work, so the saved late-round shuffle is smaller
-    than the added per-round filter/plan overhead. Flip it on when
-    the regime inverts: many rounds over a large label table with a
-    geometrically shrinking frontier (long-diameter graphs at cluster
-    scale), where rounds 2+ stop shuffling the O(V) label table and
-    the O(E) edge blocks entirely once the frontier broadcasts.
+    A delta-frontier hook (join only last round's changed labels) was
+    measured and rejected: +3…+9% slower on the near-dup graphs, which
+    converge in ~3 rounds (bench_baselines/ab_cc_delta_r15.jsonl).
     """
     # Materialize the DIRECTED edge list first (r14): the symmetrize
     # union references `edges` twice, and for LSH-verified near-dup
@@ -119,16 +96,12 @@ def connected_components(
         F.col(id_col).alias("node"), F.col(id_col).alias("component")
     ).localCheckpoint(eager=True)
     prev_ckpt = labels
-    # round 1's frontier is all nodes (initial labels count as
-    # changed); only consulted when delta_frontier is on
-    frontier = labels
 
     for round_no in range(1, max_iter + 1):
         if stats is not None:
             stats["rounds"] = round_no
-        hook_src = frontier if delta_frontier else labels
         nbr_min = (
-            hook_src.join(sym, hook_src["node"] == sym["src"])
+            labels.join(sym, labels["node"] == sym["src"])
             .groupBy(F.col("dst").alias("node"))
             .agg(F.min("component").alias("nbr_component"))
         )
@@ -165,40 +138,17 @@ def connected_components(
         # label blocks are dead weight from here, free them now
         # (prev_ckpt is always the checkpoint FRAME itself: a
         # projection over it would not expose the LogicalRDD)
-        _release_checkpoint(prev_ckpt)
+        release(prev_ckpt)
         prev_ckpt = relabeled
         labels = relabeled.drop("changed")
         if changed == 0:
-            _release_checkpoint(edges)
+            release(edges)
             return labels
-        if delta_frontier:
-            # next round's frontier: a narrow filter over the fresh
-            # checkpoint blocks, never a recomputation
-            frontier = relabeled.filter(F.col("changed") == 1).drop(
-                "changed"
-            )
         if compress:
             # p(u) := p(p(u)) — component values are node ids, so the
             # lookup is a self-join; inner is safe (every component id
-            # is present as a node). The jump can LOWER labels the
-            # hook's `changed` flag never saw, so the delta frontier
-            # must also capture jump-changed nodes: `j_changed` ORs
-            # the hook flag with a strict jump decrease (labels only
-            # ever decrease, so p_component < component is exact).
-            j_cols = [
-                F.col("l.node").alias("node"),
-                F.col("p_component").alias("component"),
-            ]
-            if delta_frontier:
-                j_cols.append(
-                    (
-                        (F.col("l.changed") == 1)
-                        | (F.col("p_component") < F.col("l.component"))
-                    )
-                    .cast("int")
-                    .alias("j_changed")
-                )
-            jumped = (
+            # is present as a node)
+            labels = (
                 relabeled.alias("l")
                 .join(
                     relabeled.select(
@@ -207,18 +157,14 @@ def connected_components(
                     ),
                     F.col("l.component") == F.col("p_node"),
                 )
-                .select(*j_cols)
-            )
-            jumped = jumped.localCheckpoint(eager=True)
-            _release_checkpoint(prev_ckpt)
-            prev_ckpt = jumped
-            if delta_frontier:
-                labels = jumped.drop("j_changed")
-                frontier = jumped.filter(F.col("j_changed") == 1).drop(
-                    "j_changed"
+                .select(
+                    F.col("l.node").alias("node"),
+                    F.col("p_component").alias("component"),
                 )
-            else:
-                labels = jumped
+                .localCheckpoint(eager=True)
+            )
+            release(prev_ckpt)
+            prev_ckpt = labels
     raise RuntimeError(
         f"connected_components: no convergence in {max_iter} rounds — "
         "graph diameter exceeds the bound; raise max_iter or switch to "

@@ -672,6 +672,44 @@ def streaming_enrichment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.table(name)
 
 
+def _upsert_events_silver(spark: SparkSession, sf_dir: str, site: str) -> str:
+    """Replay the events table as a file stream (maxFilesPerTrigger=1)
+    through the CDC sink into a silver table partitioned on the
+    key-stable bucket ``user_bucket = user_id % 8``; returns the silver
+    path. ``site`` names this caller's scratch trees."""
+    from automatic_etl_spark.session import stream_state_partitions
+
+    path = stage_stream_dir(spark, sf_dir, "events")
+    silver = scratch_dir(f"{site}_silver") + "/t"
+    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set(
+        "spark.sql.shuffle.partitions", str(stream_state_partitions(path))
+    )
+    stream = (
+        spark.readStream.schema(spark.read.parquet(path).schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(path)
+        .withColumn("user_bucket", F.col("user_id") % 8)
+    )
+    query = (
+        stream.writeStream.foreachBatch(
+            cdc.foreach_batch_upsert_partitioned(
+                silver, ["user_id"], ["ts", "event_id"], "user_bucket"
+            )
+        )
+        .option("checkpointLocation", scratch_dir(f"{site}_ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        query.awaitTermination()
+    finally:
+        # restore even when the stream raises — a failed stream must
+        # not leak the pinned partition count into later queries
+        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
+    return silver
+
+
 @register(
     "streaming_upsert_pipe",
     oracle="""
@@ -693,38 +731,11 @@ def streaming_upsert_pipe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S10/T6 end to end as an oracle query: the event stream replays
     in micro-batches (maxFilesPerTrigger=1) through the foreachBatch
     last-writer-wins upsert into a parquet silver table; reading the
-    silver table back must equal the batch LWW dedup — the oracle. At
-    scale the same sink becomes the partition-pruned variant
-    (foreach_batch_upsert_partitioned) or Delta MERGE INTO."""
-    import os
-
-    from automatic_etl_spark.session import stream_state_partitions
-
-    path = stage_stream_dir(spark, sf_dir, "events")
-    silver = scratch_dir("upsert_silver") + "/t"
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(stream_state_partitions(path))
-    )
-    stream = (
-        spark.readStream.schema(spark.read.parquet(path).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-    )
-    query = (
-        stream.writeStream.foreachBatch(
-            cdc.foreach_batch_upsert(silver, ["user_id"], ["ts", "event_id"])
-        )
-        .option("checkpointLocation", scratch_dir("upsert_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        query.awaitTermination()
-    finally:
-        # restore even when the stream raises — a failed stream must
-        # not leak the pinned partition count into later queries
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
+    silver table back must equal the batch LWW dedup — the oracle.
+    Silver is partitioned on the ``user_id % 8`` bucket staged by
+    :func:`_upsert_events_silver`; the bucket never reaches the
+    output."""
+    silver = _upsert_events_silver(spark, sf_dir, "upsert")
     return (
         spark.read.parquet(silver)
         .groupBy("event_type")
@@ -760,42 +771,7 @@ def streaming_upsert_partitioned_pipe(spark: SparkSession, sf_dir: str) -> DataF
     partitions (partitionOverwriteMode=dynamic). End state must equal
     the batch LWW dedup, proving pruning loses no rows. This is the
     Delta MERGE INTO cost model expressed with plain parquet."""
-    import os
-
-    from automatic_etl_spark.session import stream_state_partitions
-
-    path = stage_stream_dir(spark, sf_dir, "events")
-    silver = os.path.join(
-        scratch_dir("upsert_part_silver"), "t"
-    )
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(stream_state_partitions(path))
-    )
-    stream = (
-        spark.readStream.schema(spark.read.parquet(path).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-        .withColumn("user_bucket", F.col("user_id") % 8)
-    )
-    query = (
-        stream.writeStream.foreachBatch(
-            cdc.foreach_batch_upsert_partitioned(
-                silver, ["user_id"], ["ts", "event_id"], "user_bucket"
-            )
-        )
-        .option(
-            "checkpointLocation", scratch_dir("upsert_part_ckpt")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        query.awaitTermination()
-    finally:
-        # restore even when the stream raises — a failed stream must
-        # not leak the pinned partition count into later queries
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
+    silver = _upsert_events_silver(spark, sf_dir, "upsert_part")
     return (
         spark.read.parquet(silver)
         .groupBy("user_bucket")

@@ -44,12 +44,11 @@ DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 # type regardless of which encoding the fixture carries. The session
 # zone is pinned UTC (session.py), so the NTZ→LTZ cast is exact.
 _NANOS_TS_CACHE: dict[str, list[str]] = {}
+_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
 
 
 def _nanos_ts_columns(path: str) -> list[str]:
     if path not in _NANOS_TS_CACHE:
-        import os
-
         import pyarrow.parquet as pq
         import pyarrow.types as pat
 
@@ -120,16 +119,22 @@ def table(
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
     ns_cols = _nanos_ts_columns(path)
-    if ns_cols:
-        # Runtime SQL conf — set defensively so driver-created sessions
-        # (which don't go through our builder) read these files too.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    if ns_cols and spark.conf.get(_NANOS_AS_LONG, "false") != "true":
+        # get_spark sets this at build; bare driver-created sessions
+        # need the runtime set to read these files at all. Setting it
+        # only when unset keeps concurrent callers off the global conf.
+        spark.conf.set(_NANOS_AS_LONG, "true")
     df = spark.read.parquet(path)
-    for c in ns_cols:
-        df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
-    for f in df.schema.fields:
-        if isinstance(f.dataType, TimestampNTZType):
-            df = df.withColumn(f.name, F.col(f.name).cast("timestamp"))
+    ntz = {f.name for f in df.schema if isinstance(f.dataType, TimestampNTZType)}
+    if ns_cols or ntz:
+        df = df.select(*[
+            F.timestamp_micros(F.expr(f"`{c}` div 1000")).alias(c)
+            if c in ns_cols
+            else F.col(f"`{c}`").cast("timestamp").alias(c)
+            if c in ntz
+            else F.col(f"`{c}`")
+            for c in df.columns
+        ])
     if fan_out and os.path.isfile(path):
         from automatic_etl_spark.session import default_parallelism
 

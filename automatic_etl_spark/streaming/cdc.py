@@ -126,45 +126,19 @@ def cdc_microbatch_dedup(
 def _path_exists(spark, path: str) -> bool:
     """Filesystem-agnostic probe for "silver table present" via the
     Hadoop FS API — a driver-local os.path check is always False on
-    HDFS/S3, which would make the upsert sinks silently treat an
+    HDFS/S3, which would make the upsert sink silently treat an
     EXISTING silver table as absent and destroy its rows with a
     batch-only overwrite. An existing but EMPTY directory (a
     pre-created target) counts as absent: there is nothing to merge
-    and reading it cannot infer a schema."""
+    and reading it cannot infer a schema. Existence is probed
+    explicitly, never inferred from a broad except around the read: a
+    schema-evolution or transient read error taken for "absent" would
+    overwrite the committed silver state with one batch. Real errors
+    fail the batch, and the checkpoint replays it."""
     jvm = spark._jvm
     hpath = jvm.org.apache.hadoop.fs.Path(path)
     fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
     return fs.exists(hpath) and len(fs.listStatus(hpath)) > 0
-
-
-def foreach_batch_upsert(
-    target_path: str, keys: list[str], version_cols: list[str]
-):
-    """foreachBatch sink: dedup the batch, then last-writer-wins merge
-    into a parquet silver table (T6). Parquet has no MERGE, so the
-    merge is read-modify-overwrite of the union — at scale this is the
-    Delta MERGE INTO path; the semantics here are identical."""
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        deduped = cdc_microbatch_dedup(batch_df, keys, version_cols)
-        # Existence is probed EXPLICITLY, never inferred from a broad
-        # except: a schema-evolution error in unionByName or a
-        # transient read failure caught as "table absent" would
-        # overwrite the accumulated silver state with one batch —
-        # unrecoverable, since the checkpoint already committed the
-        # earlier batches. Real errors must fail the batch (the
-        # checkpoint will replay it).
-        if _path_exists(spark, target_path):
-            existing = spark.read.parquet(target_path)
-            merged = cdc_microbatch_dedup(
-                existing.unionByName(deduped), keys, version_cols
-            )
-        else:
-            merged = deduped
-        merged.write.mode("overwrite").parquet(target_path)
-
-    return _apply
 
 
 def foreach_batch_upsert_partitioned(
@@ -173,10 +147,11 @@ def foreach_batch_upsert_partitioned(
     version_cols: list[str],
     partition_col: str,
 ):
-    """Partition-pruned MERGE: the scale path for the silver sink.
+    """foreachBatch sink: dedup the batch, then last-writer-wins merge
+    into a partitioned parquet silver table (T6) — the one CDC sink.
 
-    :func:`foreach_batch_upsert` rewrites the whole table per batch —
-    fine for tests, quadratic over time at 100 TB. Here the target is
+    Parquet has no MERGE, so the merge is read-modify-overwrite, pruned
+    to the partitions the batch touches. The target is
     directory-partitioned on ``partition_col`` (which must be stable
     per key — e.g. a month bucket of the entity's creation date, the
     D3 layout) and each batch:

@@ -848,13 +848,29 @@ def test_orchestrator_parallel_matches_sequential():
     assert seen.index("join") > seen.index("a") and seen.index("join") > seen.index("b")
 
 
-def test_ingest_many_parallel_isolation(spark, tmp_path):
+def test_ingest_many_parallel_isolation(spark, tmp_path, monkeypatch):
+    from pyspark.sql import functions as F
+
+    from automatic_etl_spark import ingest
     from automatic_etl_spark.ingest import IngestSpec, ingest_many
     from automatic_etl_spark.sources.parquet import table
 
     sf = "/root/testdata/sf0.001"
     events = table(spark, sf, "events")
     orders = table(spark, sf, "orders")
+
+    # a table whose write succeeds but whose audit collect raises: the
+    # audit runs inside its phase, so only that phase fails
+    audit_fail = str(tmp_path / "af")
+    orig_ingest_table = ingest.ingest_table
+
+    def failing_audit(spark_, source, target_path, spec):
+        audit = orig_ingest_table(spark_, source, target_path, spec)
+        if target_path != audit_fail:
+            return audit
+        return audit.select(F.raise_error(F.lit("audit collect failed")))
+
+    monkeypatch.setattr(ingest, "ingest_table", failing_audit)
 
     sources = {
         "events": (
@@ -875,17 +891,25 @@ def test_ingest_many_parallel_isolation(spark, tmp_path):
             str(tmp_path / "nope"),
             IngestSpec(dedup_keys=("no_such_col",), version_cols=("nope",)),
         ),
+        "audit_fail": (orders, audit_fail, IngestSpec(audit_key="o_orderstatus")),
     }
     report = ingest_many(spark, sources, max_workers=3)
     assert report["success"] is False  # the broken table failed...
     assert report["phases"]["ingest_broken"]["status"] == "failed"
+    assert report["phases"]["ingest_audit_fail"]["status"] == "failed"
+    assert "audit collect failed" in report["phases"]["ingest_audit_fail"]["error"]
+    assert spark.read.parquet(audit_fail).count() == orders.count()
     # ...but the healthy ones completed with audits
     assert report["phases"]["ingest_events"]["status"] == "success"
     assert report["phases"]["ingest_orders"]["status"] == "success"
     assert set(report["tables"]) == {"events", "orders"}
+    # orders has no dedup → counts reconcile exactly; events pins a
+    # tiebreaker, so its dedup shrink reconciles too
     assert all(
-        r["verdict"] == "OK" for r in report["tables"]["orders"]
-    )  # no dedup → counts reconcile exactly
+        r["verdict"] == "OK"
+        for t in ("events", "orders")
+        for r in report["tables"][t]
+    )
 
 
 def test_mor_compaction_equivalence(spark, sf_dir):
@@ -986,17 +1010,11 @@ def test_connected_components_bounded_iterations(spark):
         connected_components(nodes, edges, max_iter=2)
 
 
-def test_connected_components_delta_frontier_round_counts(spark):
-    """The r15 ``delta_frontier`` mode (measured-rejected as default,
-    kept as the long-chain/at-scale knob) must not change convergence
-    round counts — the frontier only drops provably-useless min
-    contributions — and must stay exact on a graph that exercises
-    every frontier path: a diameter-5 chain, a clique, and singletons,
-    in all four (delta_frontier × compress) combinations. With
-    compress=True the frontier must also carry JUMP-changed nodes
-    (j_changed) — compress converges strictly faster on the chain,
-    which only happens if jump-lowered labels keep propagating from
-    the frontier."""
+def test_connected_components_round_counts(spark):
+    """Round counts on a graph with a diameter-5 chain, a clique and
+    singletons: plain min-label propagation needs 5 hook rounds plus
+    the no-change probe, and pointer jumping (compress=True) converges
+    in strictly fewer rounds to the same labeling."""
     from automatic_etl_spark.operators.graph import connected_components
 
     nodes = spark.createDataFrame(
@@ -1012,26 +1030,21 @@ def test_connected_components_delta_frontier_round_counts(spark):
                 **{i: 7 for i in (7, 8, 9)},
                 **{i: i for i in (10, 11, 12)}}
 
-    rounds: dict[tuple[bool, bool], int] = {}
-    for delta in (False, True):
-        for compress in (False, True):
-            stats: dict = {}
-            got = {
-                r.node: r.component
-                for r in connected_components(
-                    nodes, edges, compress=compress,
-                    delta_frontier=delta, stats=stats,
-                ).collect()
-            }
-            assert got == expected, (delta, compress)
-            rounds[(delta, compress)] = stats["rounds"]
-    # delta mode must replay the exact round structure of the default
-    assert rounds[(True, False)] == rounds[(False, False)]
-    assert rounds[(True, True)] == rounds[(False, True)]
+    rounds: dict[bool, int] = {}
+    for compress in (False, True):
+        stats: dict = {}
+        got = {
+            r.node: r.component
+            for r in connected_components(
+                nodes, edges, compress=compress, stats=stats
+            ).collect()
+        }
+        assert got == expected, compress
+        rounds[compress] = stats["rounds"]
     # diameter-5 chain: 5 hook rounds + 1 no-change probe round
-    assert rounds[(False, False)] == 6
+    assert rounds[False] == 6
     # pointer jumping reaches ~2^t: strictly fewer rounds than plain
-    assert rounds[(False, True)] < rounds[(False, False)]
+    assert rounds[True] < rounds[False]
 
 
 def test_cleanup_catalog_ignores_temp_views(spark, tmp_path):

@@ -75,7 +75,8 @@ def test_payload_schema_from_sample(spark):
 
 def test_streaming_foreach_batch_upsert(spark, sf_dir):
     """events replayed as a file stream → unwrap-less upsert: latest
-    row per user lands in the silver table (T4/T6 end to end)."""
+    row per user lands in the silver table (T4/T6 end to end). Silver
+    is partitioned on the key-stable bucket user_id % 8."""
     from automatic_etl_spark.plans.cdc_plans import stage_stream_dir
     from automatic_etl_spark.sources.parquet import table
 
@@ -88,10 +89,13 @@ def test_streaming_foreach_batch_upsert(spark, sf_dir):
             spark.readStream.schema(raw_schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(path)
+            .withColumn("user_bucket", F.col("user_id") % 8)
         )
         query = (
             stream.writeStream.foreachBatch(
-                cdc.foreach_batch_upsert(silver, ["user_id"], ["ts", "event_id"])
+                cdc.foreach_batch_upsert_partitioned(
+                    silver, ["user_id"], ["ts", "event_id"], "user_bucket"
+                )
             )
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)

@@ -39,112 +39,6 @@ def _patch_shingle_checkpoint(enable: bool):
         td.shingle_rows = orig
 
 
-def _cc_variant(nodes, edges, id_col="doc_id", src_col="a_id",
-                dst_col="b_id", max_iter=20, compress=False, stats=None,
-                lazy_round_ckpt=False):
-    """connected_components minus the sym distinct + sym checkpoint:
-    min-label propagation is duplicate-insensitive, and the union over
-    the materialized directed-edge blocks is narrow/constant-depth.
-    ``lazy_round_ckpt=True`` makes the per-round checkpoint lazy — the
-    r14 FINAL committed form, used as the legacy arm of cc_delta."""
-    from pyspark.sql import functions as F
-
-    from automatic_etl_spark.operators.graph import _release_checkpoint
-
-    edges = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).localCheckpoint(eager=True)
-    sym = edges.unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    labels = nodes.select(
-        F.col(id_col).alias("node"), F.col(id_col).alias("component")
-    ).localCheckpoint(eager=True)
-    prev_ckpt = labels
-    for round_no in range(1, max_iter + 1):
-        if stats is not None:
-            stats["rounds"] = round_no
-        nbr_min = (
-            labels.join(sym, labels["node"] == sym["src"])
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.min("component").alias("nbr_component"))
-        )
-        relabeled = (
-            labels.join(nbr_min, "node", "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("component"),
-                    F.coalesce(F.col("nbr_component"), F.col("component")),
-                ).alias("component"),
-                (
-                    F.col("nbr_component").isNotNull()
-                    & (F.col("nbr_component") < F.col("component"))
-                )
-                .cast("int")
-                .alias("changed"),
-            )
-            .localCheckpoint(eager=not lazy_round_ckpt)
-        )
-        changed = relabeled.agg(F.sum("changed")).first()[0] or 0
-        _release_checkpoint(prev_ckpt)
-        prev_ckpt = relabeled
-        labels = relabeled.drop("changed")
-        if changed == 0:
-            _release_checkpoint(edges)
-            return labels
-        if compress:
-            jumped = (
-                labels.alias("l")
-                .join(
-                    labels.select(
-                        F.col("node").alias("p_node"),
-                        F.col("component").alias("p_component"),
-                    ),
-                    F.col("l.component") == F.col("p_node"),
-                )
-                .select(
-                    F.col("l.node").alias("node"),
-                    F.col("p_component").alias("component"),
-                )
-            )
-            labels = jumped.localCheckpoint(eager=True)
-            _release_checkpoint(prev_ckpt)
-            prev_ckpt = labels
-    raise RuntimeError("no convergence")
-
-
-def _patch_cc(enable: bool):
-    from automatic_etl_spark.operators import graph
-    from automatic_etl_spark.plans import curation_plans
-
-    if not hasattr(_patch_cc, "orig"):
-        _patch_cc.orig = graph.connected_components
-    fn = _cc_variant if enable else _patch_cc.orig
-    curation_plans.connected_components = fn
-
-
-def _patch_cc_delta(enable: bool):
-    """INVERTED arms (the variant was measured and REJECTED as the
-    default — see connected_components' delta_frontier docstring):
-    A arm (enable=False) runs connected_components with
-    ``delta_frontier=True`` (only changed labels join the edge blocks
-    after round 1); B arm (enable=True) keeps the committed default
-    (full label table each round). Recorded: A +3…+9% slower at both
-    sf0.1 and the 10× corpus on the fast-converging near-dup graphs."""
-    from automatic_etl_spark.operators import graph
-    from automatic_etl_spark.plans import curation_plans
-
-    if not hasattr(_patch_cc_delta, "orig"):
-        _patch_cc_delta.orig = graph.connected_components
-
-    def _delta(*a, **k):
-        return _patch_cc_delta.orig(*a, delta_frontier=True, **k)
-
-    fn = _patch_cc_delta.orig if enable else _delta
-    curation_plans.connected_components = fn
-
-
 def _patch_no_fanout(enable: bool):
     """Force fan_out=False on EVERY table() scan (B arm) — a probe for
     queries whose fan-out repartition may be pure overhead. Winners
@@ -537,13 +431,16 @@ def _patch_pyds_drain(enable: bool):
 
 
 # Which arm runs the COMMITTED (stock) code, per experiment — the arm
-# main()'s finally-block restores after each query (r14 ADVICE: the old
-# unconditional set_a() left the LEGACY/variant arm patched into the
-# registry after an exception). Convention: B is the committed arm for
-# every experiment (including the inverted-arm cand_ckpt/boiler_ckpt,
-# whose enable=True IS stock) EXCEPT no_fanout, where A restores the
-# stock table() and B forces the fan_out=False probe.
-STOCK_ARM = {"no_fanout": "A"}
+# main()'s finally-block restores after each query, so an exception
+# never leaves a variant patched in. B is the committed arm (including
+# the inverted-arm cand_ckpt/boiler_ckpt/dim_wide/cand_mat, whose
+# enable=True IS stock) except where listed: no_fanout's A restores the
+# stock table() and B forces the fan_out=False probe; shingle_ckpt's A
+# is the committed shingle_rows (its callers checkpoint the result) and
+# B wraps it in a second checkpoint. tests/test_ab_arms.py applies A,
+# B, then this arm for every experiment and checks that the engine's
+# module attributes and REGISTRY entries are the originals again.
+STOCK_ARM = {"no_fanout": "A", "shingle_ckpt": "A"}
 
 EXPERIMENTS = {
     "cdc_inline": (
@@ -586,14 +483,6 @@ EXPERIMENTS = {
         lambda: _patch_gram_bind(False),
         lambda: _patch_gram_bind(True),
     ),
-    "cc_sym": (
-        lambda: _patch_cc(False),
-        lambda: _patch_cc(True),
-    ),
-    "cc_delta": (
-        lambda: _patch_cc_delta(False),
-        lambda: _patch_cc_delta(True),
-    ),
     "dim_wide": (
         lambda: _patch_dim_wide(False),
         lambda: _patch_dim_wide(True),
@@ -607,6 +496,12 @@ EXPERIMENTS = {
         lambda: _patch_no_fanout(True),
     ),
 }
+
+
+def restore_stock(exp_name: str) -> None:
+    """Put the COMMITTED arm of ``exp_name`` back in place."""
+    set_a, set_b = EXPERIMENTS[exp_name]
+    (set_a if STOCK_ARM.get(exp_name, "B") == "A" else set_b)()
 
 
 def main() -> int:
@@ -654,8 +549,7 @@ def main() -> int:
                   flush=True)
             continue
         finally:
-            # leave the COMMITTED arm in place (see STOCK_ARM)
-            (set_a if STOCK_ARM.get(exp_name, "B") == "A" else set_b)()
+            restore_stock(exp_name)
         out = {
             arm: {
                 "runs": v,
