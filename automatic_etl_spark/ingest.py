@@ -164,8 +164,9 @@ def ingest_many(
     ``sources[name] = (df, target_path, spec)``. Returns the Q6-style
     status report; failed tables appear with their error, successful
     ones with their audit rows. The audit rows are collected inside
-    the table's phase, so a failing audit gets the phase's retries and
-    fails only its own table.
+    the table's phase, so a failing write or audit fails only its own
+    table, after one attempt: Spark already retries failed tasks, and
+    a job that still fails is not transient.
     """
     from automatic_etl_spark.orchestrator import Orchestrator, Phase, status_report
 
@@ -176,7 +177,7 @@ def ingest_many(
             audit = ingest_table(spark, df, target, spec)
             return [row.asDict() for row in audit.collect()]
 
-        return Phase(f"ingest_{name}", run, max_retries=2)
+        return Phase(f"ingest_{name}", run)
 
     dag = Orchestrator()
     for name in sources:

@@ -4,8 +4,8 @@ tools/master_orchestrator.py:60-229,552-630).
 
 The reference runs phases as subprocesses in containers with
 per-phase timeouts, retries (≤3) and validation scripts. Here a phase
-is a Python callable over a SparkSession; dependency ordering is a
-topological sort; failures isolate per phase (RecoverableError →
+is a Python callable over a SparkSession; a phase starts once its
+dependencies have finished; failures isolate per phase (RecoverableError →
 retry, anything else → mark failed, skip dependents) — the same
 fault-tolerance policy as ingest_runner's per-table isolation
 (tools/ingest_runner.py:1749-1759,2211-2224).
@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import time
 from collections.abc import Callable
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 
 
@@ -68,10 +69,10 @@ class Orchestrator:
         self.phases.append(phase)
         return self
 
-    def _ordered(self) -> list[Phase]:
+    def _check_dag(self) -> None:
+        """Raise ValueError on an unknown dependency or a cycle."""
         by_name = {p.name: p for p in self.phases}
         seen: dict[str, int] = {}  # 0=visiting, 1=done
-        order: list[Phase] = []
 
         def visit(name: str) -> None:
             state = seen.get(name)
@@ -85,56 +86,36 @@ class Orchestrator:
                     raise ValueError(f"unknown dependency {dep} of {name}")
                 visit(dep)
             seen[name] = 1
-            order.append(by_name[name])
 
         for p in self.phases:
             visit(p.name)
-        return order
 
     def run(
         self, context: object = None, max_workers: int = 1
     ) -> dict[str, PhaseResult]:
-        """Execute the DAG. ``max_workers > 1`` runs INDEPENDENT phases
+        """Execute the DAG: every phase whose dependencies have finished
+        goes, in declaration order, to a pool of ``max_workers`` driver
+        threads. ``max_workers > 1`` runs INDEPENDENT phases
         concurrently (the reference is strictly sequential,
         tools/master_orchestrator.py; Spark happily runs concurrent
         jobs from driver threads, so e.g. per-table ingest phases
-        overlap their scans/writes)."""
-        if max_workers > 1:
-            return self._run_parallel(context, max_workers)
+        overlap their scans/writes); ``1`` runs one phase at a time."""
+        self._check_dag()
         by_name = {p.name: p for p in self.phases}
         results: dict[str, PhaseResult] = {}
-        for phase in self._ordered():
-            # a failed NON-critical dependency does not block
-            # dependents (critical=False marks optional enrichment)
-            failed_dep = any(
-                results[d].status != "success" and by_name[d].critical
-                for d in phase.depends_on
-            )
-            if failed_dep:
-                results[phase.name] = PhaseResult(phase.name, "skipped")
-                continue
-            results[phase.name] = self._run_phase(phase, context)
-        return results
-
-    def _run_parallel(
-        self, context: object, max_workers: int
-    ) -> dict[str, PhaseResult]:
-        from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
-
-        self._ordered()  # validates deps + detects cycles up front
-        by_name = {p.name: p for p in self.phases}
-        results: dict[str, PhaseResult] = {}
-        pending = set(by_name)
+        pending = list(by_name)
         futures = {}
         with ThreadPoolExecutor(max_workers=max_workers) as pool:
             while pending or futures:
                 ready = [
                     n
-                    for n in list(pending)
+                    for n in pending
                     if all(d in results for d in by_name[n].depends_on)
                 ]
                 for n in ready:
-                    pending.discard(n)
+                    pending.remove(n)
+                    # a failed NON-critical dependency does not block
+                    # dependents (critical=False marks optional enrichment)
                     if any(
                         results[d].status != "success"
                         and by_name[d].critical
@@ -149,7 +130,7 @@ class Orchestrator:
                 for fut in done:
                     name = futures.pop(fut)
                     results[name] = fut.result()
-        return results
+        return {n: results[n] for n in by_name}
 
     def _run_phase(self, phase: Phase, context: object) -> PhaseResult:
         start = time.perf_counter()

@@ -14,7 +14,6 @@ path gets a value-hash oracle instead of a rows-only check.
 
 from __future__ import annotations
 
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -30,8 +29,25 @@ from pyspark.sql.types import (
 from automatic_etl_spark.plans.registry import register
 from automatic_etl_spark.plans.relational import qround
 from automatic_etl_spark.scratch import scratch_dir
+from automatic_etl_spark.session import (
+    default_parallelism,
+    session_conf,
+    stream_state_partitions,
+)
 from automatic_etl_spark.sources.parquet import table
 from automatic_etl_spark.streaming import cdc
+
+_SHUFFLE = "spark.sql.shuffle.partitions"
+
+
+def _stage(frame: DataFrame, site: str) -> str:
+    """Write ``frame`` as (at most) two parquet files into the fresh
+    scratch dir ``site`` and return it: the directory a file stream
+    source reads. With ``maxFilesPerTrigger=1`` the two files are two
+    micro-batches."""
+    d = scratch_dir(site)
+    frame.coalesce(2).write.mode("overwrite").parquet(d)
+    return d
 
 
 def stage_stream_dir(
@@ -43,11 +59,46 @@ def stage_stream_dir(
     TIMESTAMP_NTZ the next — is absorbed at this boundary and the
     staged files always carry plain TIMESTAMP columns. Tiny write: the
     stream tables don't scale with sf."""
-    d = scratch_dir(f"stream_{name}")
-    table(spark, sf_dir, name, fan_out=False).coalesce(2).write.mode(
-        "overwrite"
-    ).parquet(d)
-    return d
+    return _stage(table(spark, sf_dir, name, fan_out=False), f"stream_{name}")
+
+
+def _run_bounded(spark: SparkSession, writer, checkpoint: str, partitions: int):
+    """Start ``writer`` on ``checkpoint`` with Trigger.AvailableNow,
+    wait until it has drained its bounded input, and return the query.
+
+    The stream runs on ``partitions`` shuffle partitions; the session's
+    own value comes back afterwards, also when the stream raises. A
+    stateful stream bakes that count into its checkpoint at the first
+    batch (on a default session: 200 tiny tasks) and pays a fixed
+    state-store commit per (partition × micro-batch), so a low-volume
+    stream must not pay the full CPU budget's worth. Callers size it to
+    the staged volume with :func:`stream_state_partitions` (every
+    checkpoint here is fresh), unless the site says why not."""
+    with session_conf(spark, {_SHUFFLE: str(partitions)}):
+        query = (
+            writer.option("checkpointLocation", checkpoint)
+            .trigger(availableNow=True)
+            .start()
+        )
+        query.awaitTermination()
+    return query
+
+
+def _to_memory(
+    spark: SparkSession, frame: DataFrame, mode: str, site: str, partitions: int
+):
+    """Run the stream ``frame`` to completion into a uniquely named
+    memory sink (checkpoint in scratch ``{site}_ckpt``); return the
+    sink table and the finished query."""
+    name = f"{site}_{uuid.uuid4().hex[:8]}"
+    query = _run_bounded(
+        spark,
+        frame.writeStream.format("memory").queryName(name).outputMode(mode),
+        scratch_dir(f"{site}_ckpt"),
+        partitions,
+    )
+    return spark.table(name), query
+
 
 # Debezium op per event_type — 'error' events play the deletes.
 _OP_MAP = {"signup": "c", "purchase": "u", "click": "u", "view": "r", "error": "d"}
@@ -143,17 +194,6 @@ def streaming_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     Trigger.AvailableNow — T5 extension semantics on real
     ``readStream``."""
     path = stage_stream_dir(spark, sf_dir, "events")
-    # Stateful-stream shuffle partition count is baked into the
-    # checkpoint at first batch; on a default session that is 200 tiny
-    # tasks. Size it to staged volume (fresh checkpoint per call) —
-    # state-store commit cost is per (partition × batch), so a
-    # low-volume stream must not pay the full CPU budget's worth.
-    from automatic_etl_spark.session import stream_state_partitions
-
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(stream_state_partitions(path))
-    )
     # Staged files are normalized (ts is plain TIMESTAMP) regardless of
     # the fixture's on-disk encoding.
     stream = spark.readStream.schema(spark.read.parquet(path).schema).parquet(path)
@@ -173,22 +213,10 @@ def streaming_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             "value_total",
         )
     )
-    name = f"stream_hourly_{uuid.uuid4().hex[:8]}"
-    query = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", scratch_dir("cdc_ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    counts, _ = _to_memory(
+        spark, agg, "complete", "stream_hourly", stream_state_partitions(path)
     )
-    try:
-        query.awaitTermination()
-    finally:
-        # restore even when the stream raises — a failed stream must
-        # not leak the pinned partition count into later queries
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-    return spark.table(name)
+    return counts
 
 
 @register(
@@ -206,46 +234,25 @@ def streaming_replay_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the key; in production bound it with
     ``dropDuplicatesWithinWatermark`` so state ages out with the
     delivery-replay horizon."""
-    import os
-
     events = table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type"
     )
     doubled = events.unionByName(events)  # the replayed delivery
-    stage = scratch_dir("replay_stage")
-    data_dir = os.path.join(stage, "data")
-    doubled.coalesce(2).write.mode("overwrite").parquet(data_dir)
-
-    from automatic_etl_spark.session import stream_state_partitions
-
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(stream_state_partitions(data_dir))
-    )
+    data_dir = _stage(doubled, "replay_stage")
     stream = (
         spark.readStream.schema("event_id long, user_id long, event_type string")
         .option("maxFilesPerTrigger", 1)
         .parquet(data_dir)
     )
-    name = f"replay_dedup_{uuid.uuid4().hex[:8]}"
-    query = (
-        stream.dropDuplicates(["event_id"])
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", scratch_dir("replay_ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    deduped, _ = _to_memory(
+        spark,
+        stream.dropDuplicates(["event_id"]),
+        "append",
+        "replay",
+        stream_state_partitions(data_dir),
     )
-    try:
-        query.awaitTermination()
-    finally:
-        # restore even when the stream raises — a failed stream must
-        # not leak the pinned partition count into later queries
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
     return (
-        spark.table(name)
-        .groupBy("event_type")
+        deduped.groupBy("event_type")
         .agg(F.count("*").alias("cnt"), F.sum("user_id").alias("user_total"))
     )
 
@@ -267,22 +274,11 @@ def streaming_watermark_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     and no row is late within the run; the sink must equal exactly-once.
     At cluster scale the same plan holds state proportional to the replay
     horizon, not the stream's lifetime."""
-    import os
-
-    from automatic_etl_spark.session import stream_state_partitions
-
     events = table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "ts"
     )
     doubled = events.unionByName(events)  # the replayed delivery
-    stage = scratch_dir("wm_dedup_stage")
-    data_dir = os.path.join(stage, "data")
-    doubled.coalesce(2).write.mode("overwrite").parquet(data_dir)
-
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(stream_state_partitions(data_dir))
-    )
+    data_dir = _stage(doubled, "wm_dedup_stage")
     stream = (
         spark.readStream.schema(
             "event_id long, user_id long, event_type string, ts timestamp"
@@ -290,26 +286,17 @@ def streaming_watermark_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(data_dir)
     )
-    name = f"wm_dedup_{uuid.uuid4().hex[:8]}"
-    query = (
-        stream.withWatermark("ts", "60 days")
-        .dropDuplicatesWithinWatermark(["event_id"])
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", scratch_dir("wm_dedup_ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    deduped, _ = _to_memory(
+        spark,
+        stream.withWatermark("ts", "60 days").dropDuplicatesWithinWatermark(
+            ["event_id"]
+        ),
+        "append",
+        "wm_dedup",
+        stream_state_partitions(data_dir),
     )
-    try:
-        query.awaitTermination()
-    finally:
-        # restore even when the stream raises — a failed stream must
-        # not leak the pinned partition count into later queries
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
     return (
-        spark.table(name)
-        .groupBy("event_type")
+        deduped.groupBy("event_type")
         .agg(
             F.count("*").alias("cnt"),
             F.sum("user_id").alias("user_total"),
@@ -334,53 +321,35 @@ def stateful_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the highest n_events — counts strictly increase) must equal
     the plain batch aggregate. Integer-cents state keeps accumulation
     exact under ANY file→batch assignment."""
-    import os
-
-    from automatic_etl_spark.session import default_parallelism
     from automatic_etl_spark.streaming.stateful import running_user_totals
 
     events = table(spark, sf_dir, "events").select(
         "user_id", F.floor(F.col("value") * 100).alias("cents")
     )
-    stage = scratch_dir("stateful_stage")
-    data_dir = os.path.join(stage, "data")
-    events.coalesce(2).write.mode("overwrite").parquet(data_dir)
-
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    # Deliberately CPU-sized, NOT volume-sized (stream_state_partitions):
-    # applyInPandasWithState runs every group's pandas code in a Python
-    # worker, so the partition count is the Python-stage parallelism and
-    # per-partition state commits are noise next to it — the r7 A/B
-    # measured 2.8-5.1 s at 32 partitions vs 5.3-7.6 s at 1.
-    spark.conf.set("spark.sql.shuffle.partitions", str(default_parallelism()))
+    data_dir = _stage(events, "stateful_stage")
     stream = (
         spark.readStream.schema("user_id long, cents long")
         .option("maxFilesPerTrigger", 1)
         .parquet(data_dir)
     )
-    name = f"stateful_totals_{uuid.uuid4().hex[:8]}"
-    query = (
-        running_user_totals(stream)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation", scratch_dir("stateful_ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    # Deliberately CPU-sized, NOT volume-sized (stream_state_partitions):
+    # applyInPandasWithState runs every group's pandas code in a Python
+    # worker, so the partition count is the Python-stage parallelism and
+    # per-partition state commits are noise next to it — the r7 A/B
+    # measured 2.8-5.1 s at 32 partitions vs 5.3-7.6 s at 1.
+    totals, _ = _to_memory(
+        spark,
+        running_user_totals(stream),
+        "update",
+        "stateful_totals",
+        default_parallelism(),
     )
-    try:
-        query.awaitTermination()
-    finally:
-        # restore even when the stream raises — a failed stream must
-        # not leak the pinned partition count into later queries
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
 
     from pyspark.sql import Window
 
     w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
     return (
-        spark.table(name)
-        .withColumn("rn", F.row_number().over(w))
+        totals.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .select("user_id", "n_events", "cents_total")
     )
@@ -435,8 +404,6 @@ def stream_stream_join_with_progress(
     and state metrics without reaching into the checkpoint."""
     import os
 
-    from automatic_etl_spark.session import stream_state_partitions
-
     # fan_out=False (r14): staging filters + coalesce(2)-writes — a
     # 32-way fan-out repartition immediately squeezed back to 2
     # output files was a pure extra shuffle per side.
@@ -464,14 +431,6 @@ def stream_stream_join_with_progress(
     )
     sign_dir = os.path.join(both_dir, "event_type=signup")
     purch_dir = os.path.join(both_dir, "event_type=purchase")
-
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    # 4 join state stores × partitions × batches commits: size the
-    # partition count to the staged volume, not the CPU budget.
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(stream_state_partitions(sign_dir, purch_dir)),
-    )
     signups = (
         spark.readStream.schema("user_id long, ts timestamp")
         .option("maxFilesPerTrigger", 1)
@@ -496,24 +455,17 @@ def stream_stream_join_with_progress(
         & (F.col("p_ts") >= F.col("s_ts"))
         & (F.col("p_ts") <= F.col("s_ts") + F.expr("INTERVAL 7 DAYS")),
     )
-    name = f"ss_join_{uuid.uuid4().hex[:8]}"
-    query = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", scratch_dir("ss_join_ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    # 4 join state stores × partitions × batches commits: size the
+    # partition count to the staged volume, not the CPU budget.
+    pairs, query = _to_memory(
+        spark,
+        joined,
+        "append",
+        "ss_join",
+        stream_state_partitions(sign_dir, purch_dir),
     )
-    try:
-        query.awaitTermination()
-    finally:
-        # restore even when the stream raises — a failed stream must
-        # not leak the pinned partition count into later queries
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
     result = (
-        spark.table(name)
-        .groupBy(F.col("s_user").alias("user_id"))
+        pairs.groupBy(F.col("s_user").alias("user_id"))
         .agg(
             F.count("*").alias("pair_cnt"),
             F.sum(
@@ -620,10 +572,6 @@ def streaming_enrichment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     a STATIC dimension (no state store — the dim is re-broadcast per
     batch), then aggregate in complete mode. The standard lookup-table
     enrichment shape for CDC/event streams."""
-    import os
-
-    from automatic_etl_spark.session import stream_state_partitions
-
     dim = spark.createDataFrame(
         [
             ("click", 1, "low"),
@@ -637,14 +585,7 @@ def streaming_enrichment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = table(spark, sf_dir, "events").select(
         "event_type", F.floor(F.col("value") * 100).alias("cents")
     )
-    stage = scratch_dir("enrich_stage")
-    data_dir = os.path.join(stage, "data")
-    events.coalesce(2).write.mode("overwrite").parquet(data_dir)
-
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(stream_state_partitions(data_dir))
-    )
+    data_dir = _stage(events, "enrich_stage")
     stream = (
         spark.readStream.schema("event_type string, cents long")
         .option("maxFilesPerTrigger", 1)
@@ -654,22 +595,10 @@ def streaming_enrichment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("cnt"),
         F.sum(F.col("cents") * F.col("weight")).alias("weighted_cents"),
     )
-    name = f"enrich_{uuid.uuid4().hex[:8]}"
-    query = (
-        enriched.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", scratch_dir("enrich_ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    tiers, _ = _to_memory(
+        spark, enriched, "complete", "enrich", stream_state_partitions(data_dir)
     )
-    try:
-        query.awaitTermination()
-    finally:
-        # restore even when the stream raises — a failed stream must
-        # not leak the pinned partition count into later queries
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-    return spark.table(name)
+    return tiers
 
 
 def _upsert_events_silver(spark: SparkSession, sf_dir: str, site: str) -> str:
@@ -677,36 +606,24 @@ def _upsert_events_silver(spark: SparkSession, sf_dir: str, site: str) -> str:
     through the CDC sink into a silver table partitioned on the
     key-stable bucket ``user_bucket = user_id % 8``; returns the silver
     path. ``site`` names this caller's scratch trees."""
-    from automatic_etl_spark.session import stream_state_partitions
-
     path = stage_stream_dir(spark, sf_dir, "events")
     silver = scratch_dir(f"{site}_silver") + "/t"
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(stream_state_partitions(path))
-    )
     stream = (
         spark.readStream.schema(spark.read.parquet(path).schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(path)
         .withColumn("user_bucket", F.col("user_id") % 8)
     )
-    query = (
+    _run_bounded(
+        spark,
         stream.writeStream.foreachBatch(
             cdc.foreach_batch_upsert_partitioned(
                 silver, ["user_id"], ["ts", "event_id"], "user_bucket"
             )
-        )
-        .option("checkpointLocation", scratch_dir(f"{site}_ckpt"))
-        .trigger(availableNow=True)
-        .start()
+        ),
+        scratch_dir(f"{site}_ckpt"),
+        stream_state_partitions(path),
     )
-    try:
-        query.awaitTermination()
-    finally:
-        # restore even when the stream raises — a failed stream must
-        # not leak the pinned partition count into later queries
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
     return silver
 
 
@@ -881,20 +798,15 @@ def streaming_dq_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     NO budgets (nothing aborts at fixture scale); the abort path and
     the at-least-once replay guard are pinned by dedicated units in
     tests/test_streaming.py."""
-    path = stage_stream_dir(spark, sf_dir, "events")
-    from automatic_etl_spark.session import stream_state_partitions
     from automatic_etl_spark.streaming.dq import run_dq_gate
 
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(stream_state_partitions(path))
+    path = stage_stream_dir(spark, sf_dir, "events")
+    stream = (
+        spark.readStream.schema(spark.read.parquet(path).schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(path)
     )
-    try:
-        stream = (
-            spark.readStream.schema(spark.read.parquet(path).schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(path)
-        )
+    with session_conf(spark, {_SHUFFLE: str(stream_state_partitions(path))}):
         totals = run_dq_gate(
             stream,
             checks={
@@ -906,8 +818,6 @@ def streaming_dq_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             },
             checkpoint=scratch_dir("dq_ckpt"),
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
     rows = [
         (chk, totals[chk], totals["rows_scanned"])
         for chk in ("null_value", "value_above_100", "unknown_event_type")
@@ -966,15 +876,8 @@ def python_stream_source_totals(
     from automatic_etl_spark.sources import pydatasource
 
     pydatasource.register(spark)
-    from automatic_etl_spark.session import stream_state_partitions
-
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(stream_state_partitions(rows=rows)),
-    )
     name = f"pyds_stream_{uuid.uuid4().hex[:8]}"
-    try:
+    with session_conf(spark, {_SHUFFLE: str(stream_state_partitions(rows=rows))}):
         stream = (
             spark.readStream.format(pydatasource.FORMAT_NAME)
             .option("rows", str(rows))
@@ -1014,8 +917,6 @@ def python_stream_source_totals(
             time.sleep(0.05)
         query.stop()
         query.awaitTermination(30)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
     return (
         spark.table(name)
         .groupBy((F.col("user_id") % 5).alias("cohort"))
@@ -1055,41 +956,27 @@ def state_store_inspection(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate of the same input, proving the persisted state is the
     answer, not just the memory sink. At scale the state source reads
     only state files (O(|keys|)), never the stream's input data."""
-    from automatic_etl_spark.session import stream_state_partitions
-
     path = stage_stream_dir(spark, sf_dir)
     chk = scratch_dir("state_chk")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(stream_state_partitions(path))
+    stream = spark.readStream.schema(spark.read.parquet(path).schema).parquet(path)
+    agg = (
+        stream.select(
+            "event_type",
+            F.floor(F.col("value") * 100).cast("bigint").alias("cents"),
+        )
+        .groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("cnt"),
+            F.sum("cents").alias("cents_total"),
+        )
     )
     name = f"state_inspect_{uuid.uuid4().hex[:8]}"
-    try:
-        stream = spark.readStream.schema(
-            spark.read.parquet(path).schema
-        ).parquet(path)
-        agg = (
-            stream.select(
-                "event_type",
-                F.floor(F.col("value") * 100).cast("bigint").alias("cents"),
-            )
-            .groupBy("event_type")
-            .agg(
-                F.count(F.lit(1)).alias("cnt"),
-                F.sum("cents").alias("cents_total"),
-            )
-        )
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
+    _run_bounded(
+        spark,
+        agg.writeStream.format("memory").queryName(name).outputMode("complete"),
+        chk,
+        stream_state_partitions(path),
+    )
     state = spark.read.format("statestore").load(chk)
     return state.select(
         F.col("key.event_type").alias("event_type"),

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from automatic_etl_spark.plans.registry import register
 from automatic_etl_spark.plans.relational import qround
+from automatic_etl_spark.session import session_conf
 from automatic_etl_spark.sources.parquet import table
 
 # --- Row-level referential-integrity audit -----------------------------------
@@ -135,7 +136,7 @@ def runtime_bloom_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     production scale the DEFAULT config injects this filter with no
     override at all. Optimization is forced inside the conf window
     (QueryExecution.optimizedPlan is a cached lazy val, so the
-    injected bloom filter survives the finally-restore). The oracle
+    injected bloom filter survives the conf restore). The oracle
     is the PLAIN join — pruning must be result-invisible."""
     confs = {
         "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
@@ -148,14 +149,7 @@ def runtime_bloom_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         # is what pins the executed join strategy.
         "spark.sql.autoBroadcastJoinThreshold": "-1",
     }
-    prev = {}
-    for k, v in confs.items():
-        try:
-            prev[k] = spark.conf.get(k)
-        except Exception:
-            prev[k] = None
-        spark.conf.set(k, v)
-    try:
+    with session_conf(spark, confs):
         # fan_out=False: the local fixture fan-out repartition would sit
         # between scan and join and suppress InjectRuntimeFilter (see
         # sources/parquet.table docstring); cluster layouts never take
@@ -182,15 +176,9 @@ def runtime_bloom_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Force optimization INSIDE the conf window: InjectRuntimeFilter
         # runs in the optimizer, whose output is cached on this
         # DataFrame's QueryExecution — without this the lazy optimize
-        # would run after the finally below and never inject.
+        # would run after the window closes and never inject.
         out._jdf.queryExecution().optimizedPlan()
-        return out
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    return out
 
 
 # --- Golden-record survivorship merge ----------------------------------------

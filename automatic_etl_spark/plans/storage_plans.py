@@ -707,13 +707,9 @@ def dynamic_partition_overwrite_agg(
     100 TB table relies on every time one day is recomputed.
 
     The doubled value is an exact IEEE ×2 (exponent bump), so
-    floor(v'*100) is identical on both engines.
-
-    The session-global partitionOverwriteMode toggle assumes no
-    CONCURRENT write runs in this session while the dynamic write is
-    in flight (true for the single-threaded driver/bench harnesses;
-    a multi-tenant session would need the DataFrameWriterV2
-    ``overwritePartitions()`` API instead of the conf)."""
+    floor(v'*100) is identical on both engines. The mode is a
+    per-writer option, so the session conf (and any concurrent writer
+    on it) never sees it."""
     from automatic_etl_spark.scratch import scratch_dir
 
     ev = table(spark, sf_dir, "events", fan_out=False)
@@ -734,18 +730,9 @@ def dynamic_partition_overwrite_agg(
         .withColumn("value", F.col("value") * 2)
         .repartition(1)
     )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set(
-        "spark.sql.sources.partitionOverwriteMode", "dynamic"
-    )
-    try:
-        restated.write.partitionBy("event_type").mode(
-            "overwrite"
-        ).parquet(target)
-    finally:
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", prev
-        )
+    restated.write.option("partitionOverwriteMode", "dynamic").partitionBy(
+        "event_type"
+    ).mode("overwrite").parquet(target)
     back = spark.read.parquet(target)
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("cnt"),

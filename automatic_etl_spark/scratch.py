@@ -15,7 +15,7 @@ so the fixed-name residue guarantee survives the pid component; a
 SIGKILL'd process leaves at most one orphan tree, bounded in size and
 reclaimed by normal tempdir hygiene.
 
-Assumptions (same as the session-conf toggles in the streaming plans):
+Assumptions (same as the plans' ``session.session_conf`` windows):
 the engine's query functions run single-threaded per process — two
 concurrent invocations of the SAME call site in one process would
 race on the shared tree. Names must be unique per call site for the

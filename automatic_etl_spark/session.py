@@ -10,11 +10,17 @@ Semantics pinned here (reference parity — see SURVEY.md §1.3, §7):
   explicit guards on top.
 - AQE on (coalesce + skew join): at 100 TB the runtime re-plan is what
   keeps shuffle partition sizes sane and breaks up skewed join keys.
+
+Plans that need a conf for one step (a stream's partition count, an
+optimizer window) change it only through :func:`session_conf`, which
+puts every key back when the step ends.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator, Mapping
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -22,6 +28,31 @@ from pyspark.sql import SparkSession
 def default_parallelism() -> int:
     """CPU budget: honors the driver's SPARK_GRAFT_CPUS contract."""
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+
+@contextmanager
+def session_conf(spark: SparkSession, confs: Mapping[str, str]) -> Iterator[None]:
+    """Set ``confs`` on the session for the ``with`` body, then put each
+    key back as it was, also when the body raises. A key that was unset
+    before is unset again, so a bare session (where e.g.
+    ``spark.sql.shuffle.partitions`` starts unset) leaves the window as
+    it entered it.
+
+    Session conf is shared by every thread of the session: the window
+    assumes no concurrent query in the same session reads these keys
+    meanwhile (the registry's query functions run one at a time per
+    process)."""
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def stream_state_partitions(

@@ -22,6 +22,7 @@ from automatic_etl_spark.orchestrator import (
     RecoverableError,
     status_report,
 )
+from automatic_etl_spark.session import session_conf
 from automatic_etl_spark.sources import jdbc, schema as sch
 
 
@@ -346,6 +347,23 @@ def test_orchestrator_cycle_detection():
     )
     with pytest.raises(ValueError, match="cycle"):
         orch.run()
+
+
+def test_session_conf_restores_set_and_unset_keys(spark):
+    """session_conf puts a set key back and unsets a key that was
+    unset, also when the body raises. Conf calls only, no Spark job."""
+    set_key, unset_key = "spark.sql.shuffle.partitions", "spark.graft.test.unset"
+    before = spark.conf.get(set_key)
+    assert spark.conf.get(unset_key, None) is None
+    with session_conf(spark, {set_key: "3", unset_key: "x"}):
+        assert (spark.conf.get(set_key), spark.conf.get(unset_key)) == ("3", "x")
+    assert spark.conf.get(set_key) == before
+    assert spark.conf.get(unset_key, None) is None
+    with pytest.raises(RuntimeError, match="body failed"):
+        with session_conf(spark, {set_key: "5", unset_key: "y"}):
+            raise RuntimeError("body failed")
+    assert spark.conf.get(set_key) == before
+    assert spark.conf.get(unset_key, None) is None
 
 
 def test_jdbc_e2e_derby_roundtrip(spark, tmp_path):
@@ -726,10 +744,7 @@ def test_bloom_filter_runtime_pruning(spark):
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "1KB",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
     }
-    prev = {k: spark.conf.get(k) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
+    with session_conf(spark, confs):
         li = table(spark, "/root/testdata/sf0.001", "lineitem", fan_out=False)
         orders = table(
             spark, "/root/testdata/sf0.001", "orders", fan_out=False
@@ -749,9 +764,6 @@ def test_bloom_filter_runtime_pruning(spark):
             .count()
         )
         assert row["cnt"] == expected
-    finally:
-        for k, v in prev.items():
-            spark.conf.set(k, v)
 
 
 def test_infer_numeric_types(spark):
@@ -895,8 +907,10 @@ def test_ingest_many_parallel_isolation(spark, tmp_path, monkeypatch):
     }
     report = ingest_many(spark, sources, max_workers=3)
     assert report["success"] is False  # the broken table failed...
-    assert report["phases"]["ingest_broken"]["status"] == "failed"
-    assert report["phases"]["ingest_audit_fail"]["status"] == "failed"
+    # failed Spark jobs are not retried: the phase fails on attempt 1
+    for phase in ("ingest_broken", "ingest_audit_fail"):
+        assert report["phases"][phase]["status"] == "failed"
+        assert report["phases"][phase]["attempts"] == 1
     assert "audit collect failed" in report["phases"]["ingest_audit_fail"]["error"]
     assert spark.read.parquet(audit_fail).count() == orders.count()
     # ...but the healthy ones completed with audits
@@ -1136,14 +1150,7 @@ def test_aqe_skew_join_split(spark):
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
     }
-    prev = {}
-    for k, v in confs.items():
-        try:
-            prev[k] = spark.conf.get(k)
-        except Exception:
-            prev[k] = None
-        spark.conf.set(k, v)
-    try:
+    with session_conf(spark, confs):
         left = spark.range(0, 200_000).select(
             F.when(F.col("id") % 10 != 0, F.lit(0))
             .otherwise(F.col("id"))
@@ -1172,12 +1179,6 @@ def test_aqe_skew_join_split(spark):
         hot = left_hot * n_r + right_hot * n_l
         cold = sum(i + 2 * i for i in range(10, 50_000, 10))
         assert row["t"] == hot + cold
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def test_salted_join_rejects_dim_duplicating_join_types(spark):

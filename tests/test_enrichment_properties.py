@@ -11,6 +11,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from automatic_etl_spark.plans.all_plans import REGISTRY
+from automatic_etl_spark.session import session_conf
 from automatic_etl_spark.plans.enrichment_plans import (
     BPE_TOP_K,
     CHUNK,
@@ -168,14 +169,10 @@ def test_bpe_pair_count_conservation(spark):
 def test_gap_fill_partition_invariance(spark, seed):
     """time_gap_fill output is identical under different shuffle
     partitionings (the spine construction has no order dependence)."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(2 + seed % 30))
+    with session_conf(spark, {"spark.sql.shuffle.partitions": str(2 + seed % 30)}):
         a = sorted(
             map(tuple, REGISTRY["time_gap_fill"][0](spark, SF).collect())
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     b = sorted(map(tuple, REGISTRY["time_gap_fill"][0](spark, SF).collect()))
     assert a == b
 

@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from automatic_etl_spark.plans.all_plans import REGISTRY
+from automatic_etl_spark.session import session_conf
 
 SF = "/root/testdata/sf0.001"
 
@@ -85,18 +86,14 @@ def test_dynamic_partition_pruning_injected(spark):
 def test_group_by_all_and_listagg_determinism(spark):
     """listagg WITHIN GROUP must be partitioning-invariant: identical
     output at 2 and 27 shuffle partitions."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
     outs = []
-    try:
-        for parts in ("2", "27"):
-            spark.conf.set("spark.sql.shuffle.partitions", parts)
+    for parts in ("2", "27"):
+        with session_conf(spark, {"spark.sql.shuffle.partitions": parts}):
             rows = sorted(
                 (r.regionkey, r.nations_csv)
                 for r in REGISTRY["string_agg_surface"][0](spark, SF).collect()
             )
-            outs.append(rows)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        outs.append(rows)
     assert outs[0] == outs[1]
     for _, csv in outs[0]:
         names = csv.split(",")

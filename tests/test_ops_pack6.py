@@ -496,19 +496,15 @@ def test_dynamic_overwrite_leaves_other_partitions_untouched(spark, tmp_path):
         return out
 
     before = listing()
+    mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
     restated = (
         ev.where(F.col("event_type") == "click")
         .withColumn("value", F.col("value") * 2)
         .repartition(1)
     )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        restated.write.partitionBy("event_type").mode("overwrite").parquet(
-            target
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    restated.write.option("partitionOverwriteMode", "dynamic").partitionBy(
+        "event_type"
+    ).mode("overwrite").parquet(target)
     after = listing()
     assert set(after) == set(before)
     for d in before:
@@ -516,10 +512,11 @@ def test_dynamic_overwrite_leaves_other_partitions_untouched(spark, tmp_path):
             assert after[d] != before[d]
         else:
             assert after[d] == before[d], d
-    # and the registry query's own conf restore held
+    # the per-writer option, as in the registry query, leaves the
+    # session conf alone
     assert spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode"
-    ) == prev
+        "spark.sql.sources.partitionOverwriteMode", None
+    ) == mode
 
 
 # --- ks_drift_test -----------------------------------------------------------

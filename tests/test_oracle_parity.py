@@ -8,6 +8,7 @@ import os
 import pytest
 
 from automatic_etl_spark.plans.all_plans import REGISTRY
+from automatic_etl_spark.session import session_conf
 from tests.oracle_utils import compare
 
 ORACLE_NAMES = sorted(n for n, (_f, o) in REGISTRY.items() if o is not None)
@@ -58,12 +59,8 @@ ORDER_SENSITIVE = [
 @pytest.mark.parametrize("name", ORDER_SENSITIVE)
 def test_order_sensitive_partition_sweep(name, parts, spark, duck, sf_dir):
     fn, oracle = REGISTRY[name]
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-    try:
+    with session_conf(spark, {"spark.sql.shuffle.partitions": str(parts)}):
         ok, msg = compare(fn(spark, sf_dir), duck, oracle)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     assert ok, f"{name} @ shuffle.partitions={parts}: {msg}"
 
 

@@ -5,10 +5,9 @@ inference from sample, and an end-to-end foreachBatch upsert pipeline
 from __future__ import annotations
 
 import json
-import shutil
-import tempfile
 
 from automatic_etl_spark.scratch import scratch_dir
+from automatic_etl_spark.session import session_conf
 
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -77,50 +76,21 @@ def test_streaming_foreach_batch_upsert(spark, sf_dir):
     """events replayed as a file stream → unwrap-less upsert: latest
     row per user lands in the silver table (T4/T6 end to end). Silver
     is partitioned on the key-stable bucket user_id % 8."""
-    from automatic_etl_spark.plans.cdc_plans import stage_stream_dir
+    from automatic_etl_spark.operators.dedup import latest_version
+    from automatic_etl_spark.plans.cdc_plans import _upsert_events_silver
     from automatic_etl_spark.sources.parquet import table
 
-    silver = scratch_dir("t_silver")
-    ckpt = scratch_dir("t_ckpt")
-    try:
-        path = stage_stream_dir(spark, sf_dir, "events")
-        raw_schema = spark.read.parquet(path).schema
-        stream = (
-            spark.readStream.schema(raw_schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(path)
-            .withColumn("user_bucket", F.col("user_id") % 8)
-        )
-        query = (
-            stream.writeStream.foreachBatch(
-                cdc.foreach_batch_upsert_partitioned(
-                    silver, ["user_id"], ["ts", "event_id"], "user_bucket"
-                )
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-
-        got = {
-            r.user_id: r.event_id
-            for r in spark.read.parquet(silver).collect()
-        }
-        from automatic_etl_spark.operators.dedup import latest_version
-
-        expected = {
-            r.user_id: r.event_id
-            for r in latest_version(
-                table(spark, sf_dir, "events"),
-                ["user_id"],
-                ["ts", "event_id"],
-            ).collect()
-        }
-        assert got == expected
-    finally:
-        shutil.rmtree(silver, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+    silver = _upsert_events_silver(spark, sf_dir, "t_upsert")
+    got = {r.user_id: r.event_id for r in spark.read.parquet(silver).collect()}
+    expected = {
+        r.user_id: r.event_id
+        for r in latest_version(
+            table(spark, sf_dir, "events"),
+            ["user_id"],
+            ["ts", "event_id"],
+        ).collect()
+    }
+    assert got == expected
 
 
 def test_foreach_batch_upsert_partitioned_prunes(spark):
@@ -215,15 +185,11 @@ def test_stateful_queries_match_under_rocksdb_state_store(spark, sf_dir):
         "org.apache.spark.sql.execution.streaming.state."
         "RocksDBStateStoreProvider"
     )
-    prev = spark.conf.get(key)
     for name in ("streaming_watermark_dedup", "streaming_hourly_counts"):
         fn = REGISTRY[name][0]
         baseline = sorted(map(tuple, fn(spark, sf_dir).collect()))
-        try:
-            spark.conf.set(key, rocks)
+        with session_conf(spark, {key: rocks}):
             with_rocks = sorted(map(tuple, fn(spark, sf_dir).collect()))
-        finally:
-            spark.conf.set(key, prev)
         assert with_rocks == baseline, name
 
 
@@ -338,7 +304,6 @@ def test_tws_running_totals_matches_legacy_state_api(spark, sf_dir):
         "org.apache.spark.sql.execution.streaming.state."
         "RocksDBStateStoreProvider"
     )
-    prev = spark.conf.get(provider_key)
 
     def run(factory):
         stream = (
@@ -371,12 +336,9 @@ def test_tws_running_totals_matches_legacy_state_api(spark, sf_dir):
             )
         )
 
-    try:
-        spark.conf.set(provider_key, rocksdb)
+    with session_conf(spark, {provider_key: rocksdb}):
         via_tws = run(running_user_totals_tws)
         via_legacy = run(running_user_totals)
-    finally:
-        spark.conf.set(provider_key, prev)
     assert via_tws == via_legacy
 
 
