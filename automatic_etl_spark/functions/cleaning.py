@@ -34,8 +34,12 @@ Semantics ported (reference file:line):
 
 from __future__ import annotations
 
+import functools
+
+from pyspark import SparkContext
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
 # C5: null-sentinel strings (ingest_runner.py:506-574).
 NULL_SENTINELS = ("null", "NULL", "nan", "NaN", "None", "", "na", "NA")
@@ -292,50 +296,75 @@ def clean_table(df, specs: dict[str, dict]):
     ``specs[col] = {"kind": "temporal|integer|float|string|bool|time",
     "nullable": bool, "pk": bool}`` — the shape reflection produces
     (S3). Unspecified columns pass through untouched.
+
+    Each column's expression is built once per spec and reused
+    (:func:`_column_cleaner`): building one costs up to a few hundred
+    Py4J calls, and a reload cleans the same schemas every time.
     """
+    gateway = SparkContext._gateway
     projections = []
-    for name in df.columns:
-        spec = specs.get(name)
+    for fld in df.schema.fields:
+        spec = specs.get(fld.name)
         if spec is None:
-            projections.append(F.col(name))
+            projections.append(_column_cleaner(gateway, fld.name, None))
             continue
         kind = spec.get("kind", "string")
-        pk = bool(spec.get("pk"))
-        nullable = bool(spec.get("nullable", True))
-        if kind == "temporal":
-            col = clamp_datetime_range(sanitize_dates(name))
-        elif kind == "integer":
-            col = clean_integers(name, pk=pk or not nullable)
-        elif kind == "float":
-            # raw-string sources (CSV/JSON) get the strict numeric-text
-            # gate; already-numeric columns take the cast-only fast path
-            from pyspark.sql.types import StringType
-
-            col = clean_floats(
-                name,
-                from_text=isinstance(df.schema[name].dataType, StringType),
+        projections.append(
+            _column_cleaner(
+                gateway,
+                fld.name,
+                kind,
+                bool(spec.get("pk")),
+                bool(spec.get("nullable", True)),
+                # raw-string sources (CSV/JSON) get the strict numeric-text
+                # gate; already-numeric columns take the cast-only fast path
+                kind == "float" and isinstance(fld.dataType, StringType),
             )
-            if not nullable:
-                col = fill_not_null_default(col, "double", name, pk=pk)
-        elif kind == "bool":
-            col = bool_to_int(name)
-            if not nullable:
-                col = fill_not_null_default(col, "int", name, pk=pk)
-        elif kind == "time":
-            col = format_time(name)
-            if not nullable:
-                # time renders as "HH:MM:SS" text — string default
-                col = fill_not_null_default(col, "string", name, pk=pk)
-        else:
-            col = normalize_strings(fix_mojibake(name))
-            if not nullable:
-                col = fill_not_null_default(col, "string", name, pk=pk)
-        projections.append(col.alias(name))
-        # C15 covers every kind (ingest_runner.py:629-694): the fill
-        # was previously applied only on the string branch, so a
-        # NOT-NULL float/bool/time column kept NULLs and failed
-        # downstream constraints. temporal/integer need no branch here
-        # — integer handles NOT NULL via pk-fill inside clean_integers,
-        # and a NOT-NULL temporal has no sane sentinel (reference nulls
-        # too).
+        )
     return df.select(*projections)
+
+
+@functools.lru_cache(maxsize=4096)
+def _column_cleaner(
+    gateway,
+    name: str,
+    kind: str | None,
+    pk: bool = False,
+    nullable: bool = True,
+    from_text: bool = False,
+) -> Column:
+    """The cleaned, aliased projection of one column (``kind=None``:
+    pass-through). Columns are unresolved JVM expressions, so one can
+    serve every frame with that column; the gateway is part of the key
+    because a Column is only valid in the JVM that built it."""
+    if kind is None:
+        return F.col(name)
+    if kind == "temporal":
+        col = clamp_datetime_range(sanitize_dates(name))
+    elif kind == "integer":
+        col = clean_integers(name, pk=pk or not nullable)
+    elif kind == "float":
+        col = clean_floats(name, from_text=from_text)
+        if not nullable:
+            col = fill_not_null_default(col, "double", name, pk=pk)
+    elif kind == "bool":
+        col = bool_to_int(name)
+        if not nullable:
+            col = fill_not_null_default(col, "int", name, pk=pk)
+    elif kind == "time":
+        col = format_time(name)
+        if not nullable:
+            # time renders as "HH:MM:SS" text — string default
+            col = fill_not_null_default(col, "string", name, pk=pk)
+    else:
+        col = normalize_strings(fix_mojibake(name))
+        if not nullable:
+            col = fill_not_null_default(col, "string", name, pk=pk)
+    # C15 covers every kind (ingest_runner.py:629-694): the fill
+    # was previously applied only on the string branch, so a
+    # NOT-NULL float/bool/time column kept NULLs and failed
+    # downstream constraints. temporal/integer need no branch here
+    # — integer handles NOT NULL via pk-fill inside clean_integers,
+    # and a NOT-NULL temporal has no sane sentinel (reference nulls
+    # too).
+    return col.alias(name)

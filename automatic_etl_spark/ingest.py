@@ -10,15 +10,25 @@ Spark collapses the chunk loop, the three per-chunk cleaning passes
 and the post-pass dedup into ONE plan: scan → single cleaning
 projection → window dedup → atomic overwrite write → audit. Partition
 boundaries replace chunks; the staging-table + RENAME swap becomes the
-write's atomic overwrite commit.
+write's atomic overwrite commit. The plan runs once: the audit checks
+the sink against an observation of the write instead of recomputing
+the load (:func:`write_and_audit`).
 """
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    DataType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from automatic_etl_spark.functions.cleaning import clean_table
 from automatic_etl_spark.operators.audit import grand_total
@@ -61,64 +71,81 @@ def ingest_table(
     (per-key counts + verdict, Q1). The write is an atomic overwrite —
     the Spark analog of the reference's tmp-table + RENAME swap (W2).
     """
-    expected = transform(source, spec)
-    writer = expected.write.mode("overwrite")
-    if spec.partition_by:
-        writer = writer.partitionBy(*spec.partition_by)
-    writer.parquet(target_path)
+    schema, rows = write_and_audit(spark, source, target_path, spec)
+    return spark.createDataFrame(rows, schema)
 
-    sink = spark.read.parquet(target_path)
+
+def write_and_audit(
+    spark: SparkSession,
+    source: DataFrame,
+    target_path: str,
+    spec: IngestSpec,
+) -> tuple[StructType, list[tuple]]:
+    """Run the clean→dedup plan once into an atomic overwrite of
+    ``target_path`` and check the sink against that write. Returns the
+    audit report's schema and rows.
+
+    The write carries an ``Observation`` of the rows it wrote: their
+    count and an order-independent checksum (the sum of the audit
+    key's ``xxhash64``). One union-aggregate over the source and the
+    sink read back gives per-key ``src_cnt``/``snk_cnt``. When the
+    sink's totals equal the observed ones, the sink holds what the
+    write produced, so ``expected_cnt = snk_cnt`` and every key is
+    ``OK``. Otherwise the expected side is recomputed from the source
+    and every key gets its own verdict: a wrong observation costs a
+    recompute, never a false ``OK``.
+    """
     key = spec.audit_key or (spec.dedup_keys[0] if spec.dedup_keys else None)
+    seen = Observation()
+    rows = F.count(F.lit(1)).alias("rows")
     if key is None:
-        src_cnt = source.count()
-        snk_cnt = sink.count()
-        return spark.createDataFrame(
-            [(src_cnt, snk_cnt, src_cnt - snk_cnt)],
-            "src_cnt long, snk_cnt long, diff long",
+        # src_cnt rides the write job as an observation on the source
+        expected = transform(source.observe(seen, rows), spec)
+        written = expected
+    else:
+        expected = transform(source, spec)
+        written = expected.observe(
+            seen,
+            rows,
+            # decimal(38,0): a sum of 64-bit hashes cannot overflow it
+            F.sum(F.xxhash64(key).cast("decimal(38,0)")).alias("checksum"),
         )
-    # The VERDICT compares the EXPECTED end state (the clean+dedup
-    # transform) against the sink — a raw-source comparison would flag
-    # MISMATCH on every intended dedup shrink and could never separate
-    # designed shrinkage from real loss. src_cnt stays in the report
-    # so the shrinkage itself remains observable (diff = src - snk).
-    # NULL-SAFE three-way pairing as union-then-aggregate, not three
-    # full-outer equi-joins: a plain equi-join never matches NULL=NULL,
-    # so a NULL audit key that reconciles perfectly would split into
-    # exp-only/snk-only rows with spurious MISMATCH verdicts, while
-    # groupBy treats NULL as an ordinary group. It is also the cheaper
-    # plan — ONE shuffle on the key (map-side partial counts per
-    # branch) instead of three groupBy exchanges plus join exchanges.
-    # The union compares keys in the EXPECTED frame's type: when
-    # clean_specs retypes the audit key (string source → int cleaned),
-    # a positional union would widen back to string and '007' vs 7
-    # would land in different groups, corrupting per-key diffs. The
-    # explicit try_cast mirrors the numeric coercion the previous
-    # equi-join audit applied; raw values that don't parse group under
-    # NULL (they could never have matched a cleaned key anyway).
-    exp_key_type = expected.schema[key].dataType
-
-    def _tagged(df: DataFrame, s: int, e: int, k: int) -> DataFrame:
-        kcol = F.col(key)
-        if df.schema[key].dataType != exp_key_type:
-            kcol = kcol.try_cast(exp_key_type)
-        return df.select(
-            kcol.alias(key),
-            F.lit(s).alias("__src"),
-            F.lit(e).alias("__exp"),
-            F.lit(k).alias("__snk"),
+    _write(written, target_path, spec)
+    # Read back with the written schema: inference would cost a
+    # footer-reading job and retype a string partition column ('007' → 7).
+    sink = spark.read.schema(expected.schema).parquet(target_path)
+    if key is None:
+        src_cnt, snk_cnt = seen.get["rows"], sink.count()
+        schema = StructType(
+            [StructField(c, LongType()) for c in ("src_cnt", "snk_cnt", "diff")]
         )
+        return schema, [(src_cnt, snk_cnt, src_cnt - snk_cnt)]
 
-    unioned = (
-        _tagged(source, 1, 0, 0)
-        .unionAll(_tagged(expected, 0, 1, 0))
-        .unionAll(_tagged(sink, 0, 0, 1))
+    key_type = expected.schema[key].dataType
+    schema = StructType(
+        [StructField(key, key_type)]
+        + [
+            StructField(c, LongType())
+            for c in ("src_cnt", "expected_cnt", "snk_cnt", "diff")
+        ]
+        + [StructField("verdict", StringType())]
     )
-    counted = unioned.groupBy(key).agg(
-        F.sum("__src").alias("src_cnt"),
-        F.sum("__exp").alias("expected_cnt"),
-        F.sum("__snk").alias("snk_cnt"),
+    counts = (
+        _count_by_key(key, key_type, {"src_cnt": source, "snk_cnt": sink})
+        .select(key, "src_cnt", "snk_cnt", F.xxhash64(key))
+        .collect()
     )
-    return counted.select(
+    wrote = seen.get
+    if sum(n for _, _, n, _ in counts) == wrote["rows"] and sum(
+        h * n for _, _, n, h in counts
+    ) == int(wrote["checksum"] or 0):
+        return schema, [(k, s, n, n, s - n, "OK") for k, s, n, _ in counts]
+
+    report = _count_by_key(
+        key,
+        key_type,
+        {"src_cnt": source, "expected_cnt": expected, "snk_cnt": sink},
+    ).select(
         key,
         "src_cnt",
         "expected_cnt",
@@ -128,6 +155,56 @@ def ingest_table(
         .otherwise(F.lit("MISMATCH"))
         .alias("verdict"),
     )
+    return schema, [tuple(r) for r in report.collect()]
+
+
+def _write(frame: DataFrame, target_path: str, spec: IngestSpec) -> None:
+    """Atomic overwrite of ``target_path`` with ``frame``."""
+    writer = frame.write.mode("overwrite")
+    if spec.partition_by:
+        writer = writer.partitionBy(*spec.partition_by)
+    writer.parquet(target_path)
+
+
+def _count_by_key(
+    key: str, key_type: DataType, branches: dict[str, DataFrame]
+) -> DataFrame:
+    """Per-key row count of each branch, one column per branch name.
+
+    The report compares the EXPECTED end state (the clean+dedup
+    transform, or the sink that wrote it) against the sink — a
+    raw-source comparison would flag MISMATCH on every intended dedup
+    shrink and could never separate designed shrinkage from real loss.
+    src_cnt stays in the report so the shrinkage itself remains
+    observable (diff = src - snk).
+
+    NULL-SAFE pairing as union-then-aggregate, not full-outer
+    equi-joins: a plain equi-join never matches NULL=NULL, so a NULL
+    audit key that reconciles perfectly would split into one-sided rows
+    with spurious MISMATCH verdicts, while groupBy treats NULL as an
+    ordinary group. It is also the cheaper plan — ONE shuffle on the
+    key (map-side partial counts per branch).
+
+    Keys compare in the EXPECTED frame's type: when clean_specs retypes
+    the audit key (string source → int cleaned), a positional union
+    would widen back to string and '007' vs 7 would land in different
+    groups, corrupting per-key diffs. Raw values that don't parse group
+    under NULL (they could never have matched a cleaned key anyway).
+    """
+
+    def tagged(name: str, df: DataFrame) -> DataFrame:
+        kcol = F.col(key)
+        if df.schema[key].dataType != key_type:
+            kcol = kcol.try_cast(key_type)
+        return df.select(
+            kcol.alias(key),
+            *(F.lit(int(b == name)).alias(b) for b in branches),
+        )
+
+    unioned = functools.reduce(
+        DataFrame.unionAll, (tagged(n, df) for n, df in branches.items())
+    )
+    return unioned.groupBy(key).agg(*(F.sum(b).alias(b) for b in branches))
 
 
 def ingest_status(audit: DataFrame) -> DataFrame:
@@ -174,8 +251,8 @@ def ingest_many(
         df, target, spec = sources[name]
 
         def run(_):
-            audit = ingest_table(spark, df, target, spec)
-            return [row.asDict() for row in audit.collect()]
+            schema, rows = write_and_audit(spark, df, target, spec)
+            return [dict(zip(schema.names, row)) for row in rows]
 
         return Phase(f"ingest_{name}", run)
 

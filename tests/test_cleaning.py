@@ -274,3 +274,50 @@ def test_encoding_fallback_decodes_cp1252(spark):
     assert _decode_bytes("ñ".encode("utf-8"), detect=False) == "ñ"
     # bytes cp1252 cannot decode still fall through to latin-1
     assert _decode_bytes(b"\x81", detect=False) == "\x81"
+
+
+def test_clean_table_builds_each_column_cleaner_once(spark, monkeypatch):
+    """A second clean_table over another frame with the same column
+    specs reuses the cleaners built for the first: its Py4J calls do
+    not grow with the cleaners' size. The cleaners are keyed on the
+    source dtype too: a float column read as text after one read as a
+    double still takes the numeric-text gate ('0d' → NULL, where a bare
+    cast reads 0.0)."""
+    from py4j.java_gateway import GatewayClient
+
+    specs = {
+        "id": {"kind": "integer", "pk": True, "nullable": False},
+        "f": {"kind": "temporal"},
+        "nombre": {"kind": "string", "nullable": False},
+        "amount": {"kind": "float"},
+        "activo": {"kind": "bool"},
+    }
+    select = "SELECT * FROM VALUES {} AS t(id, f, nombre, amount, activo)"
+    typed = spark.sql(select.format("('9', NULL, 'c', CAST(2.5 AS DOUBLE), '0')"))
+    assert [tuple(r) for r in cl.clean_table(typed, specs).collect()] == [
+        (9, None, "c", 2.5, 0)
+    ]
+    text = spark.sql(select.format("('7', '2020-01-01', ' a\t b ', '0d', 'x')"))
+    assert [tuple(r) for r in cl.clean_table(text, specs).collect()] == [
+        (7, dt.datetime(2020, 1, 1), "a b", None, None)
+    ]
+    other = spark.sql(select.format("('8', '0000-00-00', NULL, '2.5', '1')"))
+    other.schema  # fetch the schema before counting
+
+    calls = []
+    send = GatewayClient.send_command
+
+    def counted(self, command, *args, **kwargs):
+        # "m\nd" releases a garbage-collected Python proxy, not a build call
+        if not command.startswith("m\nd\n"):
+            calls.append(command)
+        return send(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(GatewayClient, "send_command", counted)
+    second = cl.clean_table(other, specs)
+    monkeypatch.undo()
+
+    # one list append per column plus the select itself; the first
+    # build of these five cleaners costs about a thousand calls
+    assert len(calls) <= len(specs) + 8, calls
+    assert [tuple(r) for r in second.collect()] == [(8, None, "N/A", 2.5, 1)]

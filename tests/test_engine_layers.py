@@ -466,6 +466,121 @@ def test_ingest_audit_retyped_key_reconciles(spark, tmp_path):
     assert {r["verdict"] for r in audit} == {"OK"}
 
 
+def _audit_dicts(schema, rows):
+    return [dict(zip(schema.names, r)) for r in rows]
+
+
+def test_ingest_audit_string_partition_key_reconciles(spark, tmp_path):
+    """A sink partitioned on a string audit key is read back with the
+    written schema: inference retyped '007' to 7, so '007' read
+    snk_cnt 0 and '7' read 2 on a correct load, both MISMATCH."""
+    from automatic_etl_spark.ingest import IngestSpec, write_and_audit
+
+    src = spark.sql(
+        "SELECT * FROM VALUES ('007', 'a'), ('7', 'b'), ('7', 'c'), "
+        "(CAST(NULL AS STRING), 'd') AS t(k, v)"
+    )
+    rows = _audit_dicts(*write_and_audit(
+        spark, src, str(tmp_path / "str_part"),
+        IngestSpec(audit_key="k", partition_by=("k",)),
+    ))
+    by_key = {r["k"]: r for r in rows}
+    assert set(by_key) == {"007", "7", None}
+    assert {k: r["snk_cnt"] for k, r in by_key.items()} == {
+        "007": 1, "7": 2, None: 1,
+    }
+    assert {r["verdict"] for r in rows} == {"OK"}
+
+
+def test_ingest_audit_colliding_versions_without_tiebreaker(spark, tmp_path):
+    """Rows of one dedup key share its top version and carry different
+    audit keys, and no tiebreaker is pinned: the write may keep any of
+    them, and the audit checks the sink against that write, so every
+    key reads OK and the sink holds one row per dedup key."""
+    from automatic_etl_spark.ingest import IngestSpec, write_and_audit
+
+    src = spark.range(64).repartition(4).select(
+        (F.col("id") % 16).alias("u"),
+        F.lit(1).alias("ver"),
+        (F.col("id") / 16).cast("int").alias("a"),
+    )
+    rows = _audit_dicts(*write_and_audit(
+        spark, src, str(tmp_path / "collide"),
+        IngestSpec(dedup_keys=("u",), version_cols=("ver",), audit_key="a"),
+    ))
+    assert {r["verdict"] for r in rows} == {"OK"}
+    assert sum(r["snk_cnt"] for r in rows) == 16
+    assert sum(r["src_cnt"] for r in rows) == 64
+
+
+def test_ingest_audit_lost_sink_file_reads_mismatch(spark, tmp_path, monkeypatch):
+    """A part file lost after the write breaks the observed totals, so
+    the report takes the recompute path: expected_cnt comes from the
+    recomputed clean→dedup plan, and the key that lost rows reads
+    MISMATCH while the others stay OK."""
+    import glob
+    import os
+
+    from automatic_etl_spark import ingest
+    from automatic_etl_spark.ingest import IngestSpec, write_and_audit
+
+    orig_write = ingest._write
+
+    def lossy_write(frame, target_path, spec):
+        orig_write(frame, target_path, spec)
+        os.remove(sorted(glob.glob(os.path.join(target_path, "k=1", "*.parquet")))[0])
+
+    monkeypatch.setattr(ingest, "_write", lossy_write)
+    src = spark.range(30).select(
+        (F.col("id") % 3).alias("k"),
+        (F.col("id") % 12).alias("u"),
+        F.col("id").alias("ver"),
+    )
+    rows = _audit_dicts(*write_and_audit(
+        spark, src, str(tmp_path / "lossy"),
+        IngestSpec(dedup_keys=("u",), version_cols=("ver",), audit_key="k",
+                   partition_by=("k",)),
+    ))
+    by_key = {r["k"]: r for r in rows}
+    assert {k: r["expected_cnt"] for k, r in by_key.items()} == {0: 4, 1: 4, 2: 4}
+    assert by_key[1]["snk_cnt"] < 4 and by_key[1]["verdict"] == "MISMATCH"
+    assert by_key[0]["snk_cnt"] == 4 and by_key[0]["verdict"] == "OK"
+    assert by_key[2]["snk_cnt"] == 4 and by_key[2]["verdict"] == "OK"
+
+
+def test_ingest_audit_runs_the_load_once(spark, tmp_path):
+    """One keyed single-table write + audit with a dedup spec runs 4
+    Spark jobs: the write with its dedup shuffle, and one union-aggregate
+    over source and sink with its shuffle. Recomputing the load for the
+    expected side and inferring the sink's schema made it 6 (the same
+    frame through ``ingest_table(...).collect()`` before the audit was
+    checked against the write)."""
+    from automatic_etl_spark.ingest import IngestSpec, write_and_audit
+
+    sc = spark.sparkContext
+    src = spark.range(60).select(
+        (F.col("id") % 5).alias("k"),
+        (F.col("id") % 17).alias("u"),
+        (F.col("id") % 3).alias("ver"),
+        F.col("id").cast("string").alias("v"),
+    )
+    spec = IngestSpec(
+        clean_specs={"v": {"kind": "string"}},
+        dedup_keys=("u",), version_cols=("ver",), tiebreaker=("v",),
+        audit_key="k",
+    )
+    group = "ingest-audit-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        schema, rows = write_and_audit(spark, src, str(tmp_path / "once"), spec)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 4
+    assert {r[-1] for r in rows} == {"OK"}
+
+
 def test_scratch_dir_is_process_isolated():
     """scratch_dir roots embed the pid (r7 advice): two concurrent
     processes invoking the same call site must not rmtree each other's
@@ -874,15 +989,17 @@ def test_ingest_many_parallel_isolation(spark, tmp_path, monkeypatch):
     # a table whose write succeeds but whose audit collect raises: the
     # audit runs inside its phase, so only that phase fails
     audit_fail = str(tmp_path / "af")
-    orig_ingest_table = ingest.ingest_table
+    orig_write_and_audit = ingest.write_and_audit
 
     def failing_audit(spark_, source, target_path, spec):
-        audit = orig_ingest_table(spark_, source, target_path, spec)
-        if target_path != audit_fail:
-            return audit
-        return audit.select(F.raise_error(F.lit("audit collect failed")))
+        audit = orig_write_and_audit(spark_, source, target_path, spec)
+        if target_path == audit_fail:
+            spark_.range(1).select(
+                F.raise_error(F.lit("audit collect failed"))
+            ).collect()
+        return audit
 
-    monkeypatch.setattr(ingest, "ingest_table", failing_audit)
+    monkeypatch.setattr(ingest, "write_and_audit", failing_audit)
 
     sources = {
         "events": (
