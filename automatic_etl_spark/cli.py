@@ -4,8 +4,8 @@ re-expressed for Spark (reference tools/ingest_runner.py:2029-2074):
 and audit output. Flags that only exist for the reference's
 table-DISCOVERY loop (--include/--exclude) live on the library API
 instead (sources/jdbc.filter_tables) — this CLI ingests one named
-table; --truncate-before-load is implicit (every write is an atomic
-overwrite, the W2 swap).
+table; --truncate-before-load is implicit (every write is an
+overwrite; unlike the reference's W2 swap it is not atomic yet).
 
 Subcommands:
 - ``ingest``  one table: scan → clean → dedup → write → audit report
@@ -36,7 +36,8 @@ def _emit(obj) -> None:
 
 
 def cmd_ingest(args) -> int:
-    from automatic_etl_spark.ingest import IngestSpec, ingest_status, ingest_table
+    from automatic_etl_spark.ingest import IngestSpec, ingest_table
+    from automatic_etl_spark.operators.audit import grand_total
     from automatic_etl_spark.session import get_spark
     from automatic_etl_spark.sources.parquet import table
 
@@ -67,7 +68,7 @@ def cmd_ingest(args) -> int:
             "target": args.target,
             "dedup": args.dedup,
             "audit": _rows_json(audit),
-            "status": _rows_json(ingest_status(audit)),
+            "status": _rows_json(grand_total(audit)),
         }
     )
     return 0
@@ -94,7 +95,7 @@ def cmd_views(args) -> int:
 
 
 def cmd_audit(args) -> int:
-    from automatic_etl_spark.operators.audit import reconcile_counts
+    from automatic_etl_spark.operators.audit import grand_total, reconcile_counts
     from automatic_etl_spark.session import get_spark
     from automatic_etl_spark.sources.parquet import table
 
@@ -102,7 +103,14 @@ def cmd_audit(args) -> int:
     source = table(spark, args.sf_dir, args.table)
     sink = spark.read.parquet(args.sink)
     report = reconcile_counts(source, sink, key=args.key, key_alias=args.key)
-    _emit({"command": "audit", "table": args.table, "report": _rows_json(report)})
+    _emit(
+        {
+            "command": "audit",
+            "table": args.table,
+            "report": _rows_json(report),
+            "status": _rows_json(grand_total(report)),
+        }
+    )
     return 0
 
 

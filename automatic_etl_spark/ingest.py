@@ -8,22 +8,22 @@ atomic rename (W1+W2) → count audit (Q1) → status JSON (Q6).
 
 Spark collapses the chunk loop, the three per-chunk cleaning passes
 and the post-pass dedup into ONE plan: scan → single cleaning
-projection → window dedup → atomic overwrite write → audit. Partition
-boundaries replace chunks; the staging-table + RENAME swap becomes the
-write's atomic overwrite commit. The plan runs once: the audit checks
-the sink against an observation of the write instead of recomputing
-the load (:func:`write_and_audit`).
+projection → window dedup → overwrite write → audit. Partition
+boundaries replace chunks. The staging-table + RENAME swap has no
+equivalent yet: the overwrite is NOT atomic — Spark deletes the target
+before the write job runs, so a failed reload leaves it empty
+(ROADMAP item 1). The plan runs once: the audit checks the sink
+against an observation of the write instead of recomputing the load
+(:func:`write_and_audit`).
 """
 
 from __future__ import annotations
 
-import functools
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    DataType,
     LongType,
     StringType,
     StructField,
@@ -31,7 +31,7 @@ from pyspark.sql.types import (
 )
 
 from automatic_etl_spark.functions.cleaning import clean_table
-from automatic_etl_spark.operators.audit import grand_total
+from automatic_etl_spark.operators.audit import count_by_key
 from automatic_etl_spark.operators.dedup import latest_version
 
 
@@ -68,8 +68,9 @@ def ingest_table(
     spec: IngestSpec,
 ) -> DataFrame:
     """Full pipeline for one table; returns the audit report DataFrame
-    (per-key counts + verdict, Q1). The write is an atomic overwrite —
-    the Spark analog of the reference's tmp-table + RENAME swap (W2).
+    (per-key counts + verdict, Q1). The write is a plain overwrite,
+    not the reference's atomic tmp-table + RENAME swap (W2): a failed
+    write leaves the target empty.
     """
     schema, rows = write_and_audit(spark, source, target_path, spec)
     return spark.createDataFrame(rows, schema)
@@ -81,7 +82,7 @@ def write_and_audit(
     target_path: str,
     spec: IngestSpec,
 ) -> tuple[StructType, list[tuple]]:
-    """Run the clean→dedup plan once into an atomic overwrite of
+    """Run the clean→dedup plan once into an overwrite of
     ``target_path`` and check the sink against that write. Returns the
     audit report's schema and rows.
 
@@ -93,7 +94,10 @@ def write_and_audit(
     write produced, so ``expected_cnt = snk_cnt`` and every key is
     ``OK``. Otherwise the expected side is recomputed from the source
     and every key gets its own verdict: a wrong observation costs a
-    recompute, never a false ``OK``.
+    recompute, never a false ``OK``. Verdicts compare the expected end
+    state with the sink, not the raw source, which would flag every
+    intended dedup shrink; ``diff = src - snk`` keeps the shrink
+    visible.
     """
     key = spec.audit_key or (spec.dedup_keys[0] if spec.dedup_keys else None)
     seen = Observation()
@@ -131,7 +135,7 @@ def write_and_audit(
         + [StructField("verdict", StringType())]
     )
     counts = (
-        _count_by_key(key, key_type, {"src_cnt": source, "snk_cnt": sink})
+        count_by_key(key, {"src_cnt": source}, sink)
         .select(key, "src_cnt", "snk_cnt", F.xxhash64(key))
         .collect()
     )
@@ -141,10 +145,8 @@ def write_and_audit(
     ) == int(wrote["checksum"] or 0):
         return schema, [(k, s, n, n, s - n, "OK") for k, s, n, _ in counts]
 
-    report = _count_by_key(
-        key,
-        key_type,
-        {"src_cnt": source, "expected_cnt": expected, "snk_cnt": sink},
+    report = count_by_key(
+        key, {"src_cnt": source, "expected_cnt": expected}, sink
     ).select(
         key,
         "src_cnt",
@@ -159,72 +161,12 @@ def write_and_audit(
 
 
 def _write(frame: DataFrame, target_path: str, spec: IngestSpec) -> None:
-    """Atomic overwrite of ``target_path`` with ``frame``."""
+    """Overwrite ``target_path`` with ``frame``. Not atomic: Spark
+    deletes the target before the write job runs."""
     writer = frame.write.mode("overwrite")
     if spec.partition_by:
         writer = writer.partitionBy(*spec.partition_by)
     writer.parquet(target_path)
-
-
-def _count_by_key(
-    key: str, key_type: DataType, branches: dict[str, DataFrame]
-) -> DataFrame:
-    """Per-key row count of each branch, one column per branch name.
-
-    The report compares the EXPECTED end state (the clean+dedup
-    transform, or the sink that wrote it) against the sink — a
-    raw-source comparison would flag MISMATCH on every intended dedup
-    shrink and could never separate designed shrinkage from real loss.
-    src_cnt stays in the report so the shrinkage itself remains
-    observable (diff = src - snk).
-
-    NULL-SAFE pairing as union-then-aggregate, not full-outer
-    equi-joins: a plain equi-join never matches NULL=NULL, so a NULL
-    audit key that reconciles perfectly would split into one-sided rows
-    with spurious MISMATCH verdicts, while groupBy treats NULL as an
-    ordinary group. It is also the cheaper plan — ONE shuffle on the
-    key (map-side partial counts per branch).
-
-    Keys compare in the EXPECTED frame's type: when clean_specs retypes
-    the audit key (string source → int cleaned), a positional union
-    would widen back to string and '007' vs 7 would land in different
-    groups, corrupting per-key diffs. Raw values that don't parse group
-    under NULL (they could never have matched a cleaned key anyway).
-    """
-
-    def tagged(name: str, df: DataFrame) -> DataFrame:
-        kcol = F.col(key)
-        if df.schema[key].dataType != key_type:
-            kcol = kcol.try_cast(key_type)
-        return df.select(
-            kcol.alias(key),
-            *(F.lit(int(b == name)).alias(b) for b in branches),
-        )
-
-    unioned = functools.reduce(
-        DataFrame.unionAll, (tagged(n, df) for n, df in branches.items())
-    )
-    return unioned.groupBy(key).agg(*(F.sum(b).alias(b) for b in branches))
-
-
-def ingest_status(audit: DataFrame) -> DataFrame:
-    """Q6 status rollup: totals + overall verdict. The verdict rolls
-    up the per-key verdicts (expected-vs-sink), NOT raw diff — a
-    dedup-shrinking ingest is OK by design; grand_total's diff-based
-    verdict stays the contract for the cross-table reconciliation,
-    where no transform sits between source and sink."""
-    if "verdict" not in audit.columns:
-        return grand_total(audit)
-    return audit.agg(
-        F.sum("src_cnt").alias("src_total"),
-        F.sum("snk_cnt").alias("snk_total"),
-        F.sum("diff").alias("total_diff"),
-        F.when(
-            F.sum((F.col("verdict") != "OK").cast("int")) == 0, F.lit("OK")
-        )
-        .otherwise(F.lit("MISMATCH"))
-        .alias("verdict"),
-    )
 
 
 def ingest_many(

@@ -81,12 +81,3 @@ def dedup_view(
     deduped = latest_version(df, keys, version_cols, tiebreaker)
     deduped.createOrReplaceTempView(name)
     return deduped
-
-
-def drop_exact_duplicates(df: DataFrame, subset: Sequence[str] | None = None) -> DataFrame:
-    """Exact-duplicate removal (hash groupBy under the hood).
-
-    For full-row dedup Spark plans a hash aggregate on all columns —
-    one shuffle, map-side partial combine included.
-    """
-    return df.dropDuplicates(list(subset) if subset else None)

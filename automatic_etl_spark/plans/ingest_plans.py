@@ -1,5 +1,5 @@
 """Oracle-checked plan for the end-to-end batch ingest pipeline
-(SURVEY.md §3.1): scan → clean → window dedup → atomic overwrite write
+(SURVEY.md §3.1): scan → clean → window dedup → overwrite write
 → read-back → count reconciliation. The oracle predicts the audit
 report directly from the source."""
 

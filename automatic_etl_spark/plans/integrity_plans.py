@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from automatic_etl_spark.plans.registry import register
 from automatic_etl_spark.plans.relational import qround
+from automatic_etl_spark.scratch import scratch_dir
 from automatic_etl_spark.session import session_conf
 from automatic_etl_spark.sources.parquet import table
 
@@ -298,16 +299,11 @@ def dynamic_partition_pruning_agg(
     the same aggregate from the unpartitioned table — pruning must be
     result-invisible. The write is the fixture stand-in for a table
     that is ALREADY partitioned this way in production."""
-    import os
-    import shutil
-    import tempfile
-
     ev = table(spark, sf_dir, "events", fan_out=False)
     # ONE fixed per-process target, cleared at call start (the
-    # storage_plans dpo_audit precedent): a fresh mkdtemp per call
-    # leaked a full partitioned events copy per bench/test invocation.
-    target = os.path.join(tempfile.gettempdir(), "spark_graft_dpp_audit")
-    shutil.rmtree(target, ignore_errors=True)
+    # storage_plans dpo_audit precedent): concurrent processes never
+    # clear each other's partitions mid-query.
+    target = scratch_dir("dpp_audit")
     # One file per partition dir (the compaction_file_audit pattern).
     ev.repartition(5, "event_type").write.partitionBy("event_type").mode(
         "overwrite"

@@ -43,36 +43,37 @@ DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 # normalizes BOTH to plain TIMESTAMP so every downstream plan sees one
 # type regardless of which encoding the fixture carries. The session
 # zone is pinned UTC (session.py), so the NTZ→LTZ cast is exact.
-_NANOS_TS_CACHE: dict[str, list[str]] = {}
+_NANOS_TS_CACHE: dict[tuple[str, int, int], list[str]] = {}
 _NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
 
 
 def _nanos_ts_columns(path: str) -> list[str]:
-    if path not in _NANOS_TS_CACHE:
+    if os.path.isdir(path):
+        # directory-backed table: probe one part file (all parts
+        # share the writer's encoding); empty dir -> no nanos
+        parts = sorted(
+            f for f in os.listdir(path)
+            if f.endswith(".parquet") and not f.startswith((".", "_"))
+        )
+        if not parts:
+            return []
+        path = os.path.join(path, parts[0])
+    elif not os.path.isfile(path):
+        return []
+    # keyed on size and mtime too: a file rewritten in place in another
+    # encoding must not reuse the old footer's answer
+    st = os.stat(path)
+    key = (path, st.st_size, st.st_mtime_ns)
+    if key not in _NANOS_TS_CACHE:
         import pyarrow.parquet as pq
         import pyarrow.types as pat
 
-        if not os.path.isfile(path):
-            # directory-backed table: probe one part file (all parts
-            # share the writer's encoding); empty dir -> no nanos
-            parts = sorted(
-                os.path.join(path, f)
-                for f in os.listdir(path)
-                if f.endswith(".parquet") and not f.startswith((".", "_"))
-            ) if os.path.isdir(path) else []
-            if not parts:
-                _NANOS_TS_CACHE[path] = []
-                return _NANOS_TS_CACHE[path]
-            path_to_probe = parts[0]
-        else:
-            path_to_probe = path
-        schema = pq.read_schema(path_to_probe)
-        _NANOS_TS_CACHE[path] = [
+        _NANOS_TS_CACHE[key] = [
             field.name
-            for field in schema
+            for field in pq.read_schema(path)
             if pat.is_timestamp(field.type) and field.type.unit == "ns"
         ]
-    return _NANOS_TS_CACHE[path]
+    return _NANOS_TS_CACHE[key]
 
 
 # Fixture files are written as ONE parquet row group, so a scan can

@@ -443,6 +443,43 @@ def test_ingest_audit_null_key_reconciles(spark, tmp_path):
     assert {r["verdict"] for r in audit} == {"OK"}
 
 
+@pytest.mark.parametrize("ansi", ["false", "true"])
+def test_reconcile_counts_null_one_sided_and_mixed_type_keys(spark, ansi):
+    """The reconciliation operator pairs a NULL key with NULL, keeps
+    keys present on one side only, and compares a string source key in
+    the sink's bigint type: '7x' does not parse, so it joins the NULL
+    group (src 2 / snk 1) instead of matching the sink's NULL row a
+    second time, and never fails the job when ANSI is on."""
+    from automatic_etl_spark.operators.audit import reconcile_counts
+
+    def report(src_sql, snk_sql):
+        out = reconcile_counts(spark.sql(src_sql), spark.sql(snk_sql), "k")
+        assert out.columns == ["key", "src_cnt", "snk_cnt", "diff", "verdict"]
+        return {r[0]: tuple(r[1:]) for r in out.collect()}
+
+    with session_conf(spark, {"spark.sql.ansi.enabled": ansi}):
+        same = report(
+            "SELECT * FROM VALUES (CAST(NULL AS INT)), (NULL), (1), (2) AS t(k)",
+            "SELECT * FROM VALUES (CAST(NULL AS INT)), (NULL), (2), (3) AS t(k)",
+        )
+        mixed = report(
+            "SELECT * FROM VALUES ('007'), ('7x'), (CAST(NULL AS STRING)), "
+            "('12') AS t(k)",
+            "SELECT * FROM VALUES (7L), (CAST(NULL AS BIGINT)), (12L) AS t(k)",
+        )
+    assert same == {
+        None: (2, 2, 0, "OK"),
+        1: (1, 0, 1, "MISMATCH"),
+        2: (1, 1, 0, "OK"),
+        3: (0, 1, -1, "MISMATCH"),
+    }
+    assert mixed == {
+        7: (1, 1, 0, "OK"),
+        12: (1, 1, 0, "OK"),
+        None: (2, 1, 1, "MISMATCH"),
+    }
+
+
 def test_ingest_audit_retyped_key_reconciles(spark, tmp_path):
     """When clean_specs retypes the audit key (string '007' → int 7),
     the audit must compare keys in the CLEANED type: raw and cleaned
@@ -889,6 +926,29 @@ def test_infer_numeric_types(spark):
     assert inferred == {"a": "long", "b": "double", "c": "string"}
 
 
+def test_fixture_rewritten_from_micros_to_nanos_reads_as_timestamp(spark, tmp_path):
+    """The nanos-column probe is cached per file version: a fixture
+    rewritten in place from TIMESTAMP(MICROS) to TIMESTAMP(NANOS) is
+    normalized again instead of surfacing as the raw bigint."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from automatic_etl_spark.sources.parquet import table
+
+    when = datetime.datetime(2024, 5, 6, 7, 8, 9, 123456)
+    path = str(tmp_path / "t.parquet")
+    for unit in ("us", "ns"):
+        pq.write_table(
+            pa.table({"id": [1], "ts": pa.array([when], pa.timestamp(unit))}),
+            path,
+        )
+        df = table(spark, str(tmp_path), "t")
+        assert df.schema["ts"].dataType.typeName() == "timestamp", unit
+        assert df.collect()[0]["ts"] == when, unit
+
+
 def test_schema_evolution_merge_read(spark, tmp_path):
     from automatic_etl_spark.sources.parquet import read_merged
 
@@ -922,10 +982,20 @@ def test_cli_ingest_query_audit(spark, tmp_path, capsys):
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert rc == 0 and out["command"] == "ingest"
     assert {r["verdict"] for r in out["audit"]} <= {"OK", "MISMATCH"}
+    # the status rolls up the per-key verdicts: a dedup shrink is no
+    # MISMATCH on its own
+    (status,) = out["status"]
+    assert status["total_diff"] > 0
+    assert status["verdict"] == (
+        "OK" if {r["verdict"] for r in out["audit"]} == {"OK"} else "MISMATCH"
+    )
 
     rc = cli.main(["audit", "--table", "events", "--sink", target, "--key", "event_type"])
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert rc == 0 and len(out["report"]) > 0
+    (status,) = out["status"]
+    assert status["snk_total"] == sum(r["snk_cnt"] for r in out["report"])
+    assert status["verdict"] == "MISMATCH"  # raw source vs deduped sink
 
     rc = cli.main(["query", "count_star"])
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])

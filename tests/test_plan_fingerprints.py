@@ -609,12 +609,12 @@ PINNED.update({
         "bhj": 0, "smj": 0, "shj": 0, "bnlj": 0,
         "wgl": 0, "topN": 0, "partialAgg": 0, "exch": 0,
     },
-    # r7: null-safe key pairing (eqNullSafe) re-partitions the two
-    # tiny post-aggregate count frames — +2 exchanges over frames
-    # bounded by |distinct keys|, the price of NULL keys reconciling
+    # NULL-safe key pairing is a union of the tagged source and sink
+    # keys grouped once (audit.count_by_key): one shuffle on the key,
+    # no join
     "reconciliation": {
-        "bhj": 0, "smj": 1, "shj": 0, "bnlj": 0,
-        "wgl": 0, "topN": 0, "partialAgg": 2, "exch": 4,
+        "bhj": 0, "smj": 0, "shj": 0, "bnlj": 0,
+        "wgl": 0, "topN": 0, "partialAgg": 2, "exch": 1,
     },
     # r7: EXCEPT is subtract() (left-anti + distinct in one operator)
     # instead of exceptAll().distinct() — three fewer exchanges
