@@ -52,14 +52,17 @@ def _stage(frame: DataFrame, site: str) -> str:
 
 def stage_stream_dir(
     spark: SparkSession, sf_dir: str, name: str = "events"
-) -> str:
+) -> tuple[str, StructType]:
     """Spark's file stream source wants a DIRECTORY; stage the fixture
     through the normalized ``table()`` read (NOT a raw file copy) so
     timestamp-encoding drift in the fixtures — nanos-int64 one round,
     TIMESTAMP_NTZ the next — is absorbed at this boundary and the
     staged files always carry plain TIMESTAMP columns. Tiny write: the
-    stream tables don't scale with sf."""
-    return _stage(table(spark, sf_dir, name, fan_out=False), f"stream_{name}")
+    stream tables don't scale with sf. Returns the directory and the
+    schema written there, which the stream reader is given instead of
+    inferring it with a Spark job."""
+    frame = table(spark, sf_dir, name, fan_out=False)
+    return _stage(frame, f"stream_{name}"), frame.schema
 
 
 def _run_bounded(spark: SparkSession, writer, checkpoint: str, partitions: int):
@@ -193,10 +196,10 @@ def streaming_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling-window streaming aggregation run to completion with
     Trigger.AvailableNow — T5 extension semantics on real
     ``readStream``."""
-    path = stage_stream_dir(spark, sf_dir, "events")
+    path, schema = stage_stream_dir(spark, sf_dir, "events")
     # Staged files are normalized (ts is plain TIMESTAMP) regardless of
     # the fixture's on-disk encoding.
-    stream = spark.readStream.schema(spark.read.parquet(path).schema).parquet(path)
+    stream = spark.readStream.schema(schema).parquet(path)
     agg = (
         stream.withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -606,10 +609,10 @@ def _upsert_events_silver(spark: SparkSession, sf_dir: str, site: str) -> str:
     through the CDC sink into a silver table partitioned on the
     key-stable bucket ``user_bucket = user_id % 8``; returns the silver
     path. ``site`` names this caller's scratch trees."""
-    path = stage_stream_dir(spark, sf_dir, "events")
+    path, schema = stage_stream_dir(spark, sf_dir, "events")
     silver = scratch_dir(f"{site}_silver") + "/t"
     stream = (
-        spark.readStream.schema(spark.read.parquet(path).schema)
+        spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(path)
         .withColumn("user_bucket", F.col("user_id") % 8)
@@ -800,9 +803,9 @@ def streaming_dq_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_streaming.py."""
     from automatic_etl_spark.streaming.dq import run_dq_gate
 
-    path = stage_stream_dir(spark, sf_dir, "events")
+    path, schema = stage_stream_dir(spark, sf_dir, "events")
     stream = (
-        spark.readStream.schema(spark.read.parquet(path).schema)
+        spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(path)
     )
@@ -956,9 +959,9 @@ def state_store_inspection(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate of the same input, proving the persisted state is the
     answer, not just the memory sink. At scale the state source reads
     only state files (O(|keys|)), never the stream's input data."""
-    path = stage_stream_dir(spark, sf_dir)
+    path, schema = stage_stream_dir(spark, sf_dir)
     chk = scratch_dir("state_chk")
-    stream = spark.readStream.schema(spark.read.parquet(path).schema).parquet(path)
+    stream = spark.readStream.schema(schema).parquet(path)
     agg = (
         stream.select(
             "event_type",

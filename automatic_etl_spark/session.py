@@ -128,8 +128,6 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Fixture parquet uses TIMESTAMP(NANOS); see sources/parquet.py.
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # Deliberately 8g, NOT larger: on this virtualized host a 32g
         # heap measured 8-20× SLOWER on shuffle-heavy queries (A/B:
         # minhash_lsh_dedup 3.5 s @8g vs 28-83 s @32g, degrading per

@@ -6,18 +6,35 @@ is one parquet file/dir per table under a scale-factor directory
 (TESTDATA.md). ``sources/jdbc.py`` carries the real JDBC source; this
 module is the test/bench substrate.
 
-All reads go through ``spark.read.parquet`` — Catalyst handles column
-pruning and predicate pushdown into the scan, so callers should filter
-and select early and never pre-materialize.
+``table()`` reads with the schema of the pyarrow footer
+(:func:`footer_schema`), so building a plan runs no Spark job; only a
+path whose schema the footer cannot give (missing, partitioned or
+empty directory, an unusual type) falls back to Spark's inference.
+The footer schema maps a top-level ``TIMESTAMP(NANOS)`` column to
+``long`` and a zone-less ``TIMESTAMP(MICROS)`` one to
+``timestamp_ntz``; ``table()`` then turns both into plain
+``timestamp``. Catalyst handles column pruning and predicate pushdown
+into the scan, so callers should filter and select early and never
+pre-materialize.
 """
 
 from __future__ import annotations
 
 import os
 
+import pyarrow as pa
+import pyarrow.types as pat
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import TimestampNTZType
+from pyspark.sql.pandas.types import from_arrow_type
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    MapType,
+    StructField,
+    StructType,
+    TimestampNTZType,
+)
 
 TABLES = (
     "region",
@@ -37,43 +54,107 @@ DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
 # Fixture timestamp encodings have drifted across driver rounds:
 # TIMESTAMP(NANOS) (rejected by Spark's converter — read as raw int64
-# via legacy.parquet.nanosAsLong and divided exactly) and
+# through a given ``long`` schema and divided exactly) and
 # TIMESTAMP(MICROS, isAdjustedToUTC=false) (surfaces as TIMESTAMP_NTZ,
 # which Spark 4's unix_millis/window functions reject). ``table()``
 # normalizes BOTH to plain TIMESTAMP so every downstream plan sees one
 # type regardless of which encoding the fixture carries. The session
 # zone is pinned UTC (session.py), so the NTZ→LTZ cast is exact.
-_NANOS_TS_CACHE: dict[tuple[str, int, int], list[str]] = {}
-_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+_FOOTER_CACHE: dict[
+    tuple[str, int, int], tuple[StructType | None, frozenset[str]]
+] = {}
+
+# Leaf arrow types whose ``from_arrow_type`` mapping is the type Spark's
+# own parquet read gives the column. Anything else (unsigned ints,
+# durations, times, nulls, float16, decimal256, ...) makes the footer
+# schema None and the read falls back to Spark's inference.
+_SAME_AS_SPARK = (
+    pat.is_boolean, pat.is_int8, pat.is_int16, pat.is_int32, pat.is_int64,
+    pat.is_float32, pat.is_float64, pat.is_decimal128, pat.is_string,
+    pat.is_large_string, pat.is_binary, pat.is_large_binary, pat.is_date32,
+    pat.is_timestamp,
+)
 
 
-def _nanos_ts_columns(path: str) -> list[str]:
+def _spark_type(at: pa.DataType) -> DataType | None:
+    """The type Spark's parquet read gives an arrow column, nullable at
+    every level (a file read makes it so); None when unsure. A nested
+    nanosecond timestamp is unsure: only top-level ones are mapped."""
+    if pat.is_struct(at):
+        fields = [_spark_type(f.type) for f in at]
+        if None in fields:
+            return None
+        return StructType(
+            [StructField(f.name, t, True) for f, t in zip(at, fields)]
+        )
+    if pat.is_list(at) or pat.is_large_list(at) or pat.is_fixed_size_list(at):
+        element = _spark_type(at.value_type)
+        return None if element is None else ArrayType(element, True)
+    if pat.is_map(at):
+        key, value = _spark_type(at.key_type), _spark_type(at.item_type)
+        if key is None or value is None:
+            return None
+        return MapType(key, value, True)
+    if pat.is_dictionary(at):
+        return _spark_type(at.value_type)
+    if pat.is_timestamp(at) and at.unit == "ns":
+        return None
+    if any(is_type(at) for is_type in _SAME_AS_SPARK):
+        return from_arrow_type(at, prefer_timestamp_ntz=True)
+    return None
+
+
+def footer_schema(path: str) -> tuple[StructType | None, frozenset[str]]:
+    """Spark schema and nanosecond-timestamp columns of the parquet
+    table at ``path``, from the pyarrow footer: no Spark job runs.
+
+    A directory probes its first part file (all parts share the
+    writer's schema). The schema is what Spark's own read infers —
+    ``from_arrow_type`` with NTZ for zone-less timestamps, every field
+    nullable — except that a top-level INT64 ``TIMESTAMP(NANOS)``
+    column is ``long``: Spark rejects the nanos annotation, and reads
+    the raw int64 through a given ``long`` field. The schema is None
+    (infer instead) for a missing path, a directory with no top-level
+    part file (empty, or partitioned into subdirectories) and a type
+    this mapping is not sure of. Cached per probed file, size and
+    mtime, so a file rewritten in place is read again."""
     if os.path.isdir(path):
-        # directory-backed table: probe one part file (all parts
-        # share the writer's encoding); empty dir -> no nanos
         parts = sorted(
             f for f in os.listdir(path)
             if f.endswith(".parquet") and not f.startswith((".", "_"))
         )
         if not parts:
-            return []
+            return None, frozenset()
         path = os.path.join(path, parts[0])
     elif not os.path.isfile(path):
-        return []
-    # keyed on size and mtime too: a file rewritten in place in another
-    # encoding must not reuse the old footer's answer
+        return None, frozenset()
     st = os.stat(path)
     key = (path, st.st_size, st.st_mtime_ns)
-    if key not in _NANOS_TS_CACHE:
+    if key not in _FOOTER_CACHE:
         import pyarrow.parquet as pq
-        import pyarrow.types as pat
 
-        _NANOS_TS_CACHE[key] = [
-            field.name
-            for field in pq.read_schema(path)
-            if pat.is_timestamp(field.type) and field.type.unit == "ns"
-        ]
-    return _NANOS_TS_CACHE[key]
+        footer = pq.ParquetFile(path)
+        int96 = {
+            footer.schema.column(i).path
+            for i in range(len(footer.schema))
+            if footer.schema.column(i).physical_type == "INT96"
+        }
+        arrow = footer.schema_arrow
+        ns = {
+            f.name for f in arrow
+            if pat.is_timestamp(f.type) and f.type.unit == "ns"
+            and f.name not in int96
+        }
+        # pyarrow shows a legacy INT96 timestamp as ns too; Spark reads
+        # that one as a plain timestamp
+        schema = _spark_type(pa.struct([
+            f.with_type(pa.int64()) if f.name in ns
+            else f.with_type(pa.timestamp("us", "UTC")) if f.name in int96
+            else f
+            for f in arrow
+        ]))
+        _FOOTER_CACHE[key] = (schema, frozenset(ns))
+    return _FOOTER_CACHE[key]
 
 
 # Fixture files are written as ONE parquet row group, so a scan can
@@ -119,14 +200,13 @@ def table(
     filters inject normally (see test_bloom_filter_runtime_pruning).
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
-    ns_cols = _nanos_ts_columns(path)
-    if ns_cols and spark.conf.get(_NANOS_AS_LONG, "false") != "true":
-        # get_spark sets this at build; bare driver-created sessions
-        # need the runtime set to read these files at all. Setting it
-        # only when unset keeps concurrent callers off the global conf.
-        spark.conf.set(_NANOS_AS_LONG, "true")
-    df = spark.read.parquet(path)
-    ntz = {f.name for f in df.schema if isinstance(f.dataType, TimestampNTZType)}
+    schema, ns_cols = footer_schema(path)
+    if schema is None:
+        df = spark.read.parquet(path)
+        schema = df.schema
+    else:
+        df = spark.read.schema(schema).parquet(path)
+    ntz = {f.name for f in schema if isinstance(f.dataType, TimestampNTZType)}
     if ns_cols or ntz:
         df = df.select(*[
             F.timestamp_micros(F.expr(f"`{c}` div 1000")).alias(c)

@@ -158,7 +158,13 @@ def foreach_batch_upsert_partitioned(
 
     1. collects the batch's distinct partition values (tiny driver
        list — bounded by partitions-per-batch, not data),
-    2. reads ONLY those partitions back (directory pruning),
+    2. reads ONLY those partitions back (directory pruning), with the
+       schema of the sink's own last merge write: no Spark job to
+       infer it. Only the first batch of a process that finds an
+       existing silver table infers it. A batch whose columns differ
+       from that schema still fails in ``unionByName``, so no column
+       is dropped silently; the sink assumes it is silver's only
+       writer,
     3. merges last-writer-wins within them,
     4. overwrites ONLY those partitions
        (``partitionOverwriteMode=dynamic``).
@@ -167,7 +173,10 @@ def foreach_batch_upsert_partitioned(
     proportional to the batch's partition footprint, exactly the Delta
     ``MERGE INTO`` cost model, expressed with plain parquet.
     """
+    written: StructType | None = None
+
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
+        nonlocal written
         spark = batch_df.sparkSession
         deduped = cdc_microbatch_dedup(batch_df, keys, version_cols)
         # Touched partitions come from the RAW batch (dedup cannot add
@@ -196,7 +205,8 @@ def foreach_batch_upsert_partitioned(
             )
             if has_null:
                 cond = cond | F.col(partition_col).isNull()
-            existing = spark.read.parquet(target_path).filter(cond)
+            reader = spark.read if written is None else spark.read.schema(written)
+            existing = reader.parquet(target_path).filter(cond)
             merged = cdc_microbatch_dedup(
                 existing.unionByName(deduped), keys, version_cols
             )
@@ -211,5 +221,6 @@ def foreach_batch_upsert_partitioned(
             .partitionBy(partition_col)
             .parquet(target_path)
         )
+        written = merged.schema
 
     return _apply

@@ -6,9 +6,8 @@ from __future__ import annotations
 
 import json
 
-from automatic_etl_spark.scratch import scratch_dir
-from automatic_etl_spark.session import session_conf
-
+import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     LongType,
@@ -17,6 +16,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from automatic_etl_spark.scratch import scratch_dir
+from automatic_etl_spark.session import session_conf
 from automatic_etl_spark.streaming import cdc
 
 PAYLOAD = StructType(
@@ -171,6 +172,80 @@ def test_foreach_batch_upsert_partitioned_null_partition_merges(spark):
         9: ("n2", None),       # merged LWW inside the NULL partition
         10: ("m1", None),      # inserted alongside, not clobbering 9
     }
+
+
+def _sink_batch(spark, month, ts_ms, extra=False):
+    rows = [(i, f"n{ts_ms}", ts_ms, month) for i in range(4)]
+    schema = "id long, nombre string, _ts_ms long, month string"
+    df = spark.createDataFrame(rows, schema)
+    return df.withColumn("extra", F.lit(1)) if extra else df
+
+
+def test_upsert_sink_reads_silver_with_its_written_schema(spark, monkeypatch):
+    """A later batch on an existing silver table reads silver with the
+    schema of the sink's last merge write: 5 Spark jobs, where
+    inferring the schema made it 6, and the touched month is still a
+    directory-pruning PartitionFilter of the silver scan."""
+    target = scratch_dir("t_part_upsert_schema") + "/silver"
+    apply_fn = cdc.foreach_batch_upsert_partitioned(
+        target, keys=["id"], version_cols=["_ts_ms"], partition_col="month"
+    )
+    apply_fn(_sink_batch(spark, "2024-01", 100), 0)
+    apply_fn(_sink_batch(spark, "2024-02", 100), 1)
+
+    unions = []
+    frame_cls = type(spark.range(1))
+    orig_union = frame_cls.unionByName
+
+    def spy(self, other, *args, **kwargs):
+        unions.append(self)
+        return orig_union(self, other, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "unionByName", spy)
+    sc = spark.sparkContext
+    group = "cdc-sink-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        apply_fn(_sink_batch(spark, "2024-02", 200), 2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 5
+
+    [existing] = unions
+    plan = existing._jdf.queryExecution().executedPlan().toString()
+    partition_filters = plan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
+    assert "month" in partition_filters and "2024-02" in partition_filters
+    state = {
+        (r["id"], r["month"]): r["_ts_ms"]
+        for r in spark.read.parquet(target).collect()
+    }
+    assert state == {
+        **{(i, "2024-01"): 100 for i in range(4)},
+        **{(i, "2024-02"): 200 for i in range(4)},
+    }
+
+
+def test_upsert_sink_fails_a_batch_with_a_column_silver_lacks(spark):
+    """The remembered schema never drops a column: a batch carrying a
+    column silver lacks fails in ``unionByName`` and silver keeps its
+    rows, both on the closure that wrote silver and on a fresh one that
+    infers silver's schema."""
+    target = scratch_dir("t_part_upsert_extra") + "/silver"
+    writer = cdc.foreach_batch_upsert_partitioned(
+        target, keys=["id"], version_cols=["_ts_ms"], partition_col="month"
+    )
+    writer(_sink_batch(spark, "2024-01", 100), 0)
+    fresh = cdc.foreach_batch_upsert_partitioned(
+        target, keys=["id"], version_cols=["_ts_ms"], partition_col="month"
+    )
+    for apply_fn in (writer, fresh):
+        with pytest.raises(AnalysisException):
+            apply_fn(_sink_batch(spark, "2024-01", 200, extra=True), 1)
+    rows = spark.read.parquet(target).collect()
+    assert sorted(r["_ts_ms"] for r in rows) == [100] * 4
+    assert "extra" not in spark.read.parquet(target).columns
 
 
 def test_stateful_queries_match_under_rocksdb_state_store(spark, sf_dir):
