@@ -41,18 +41,22 @@ def cmd_ingest(args) -> int:
     from automatic_etl_spark.session import get_spark
     from automatic_etl_spark.sources.parquet import table
 
+    if args.dedup != "none" and not (
+        args.unique_key and (args.version_col or args.tiebreaker)
+    ):
+        # silently running NO dedup while the output JSON reports a
+        # dedup mode would let duplicates land with a passing audit; a
+        # dedup without a version or tiebreaker has no latest row
+        print(
+            f"error: --dedup {args.dedup} requires --unique-key and "
+            "--version-col or --tiebreaker",
+            file=sys.stderr,
+        )
+        return 2
     spark = get_spark(app_name="etl-cli-ingest")
     source = table(spark, args.sf_dir, args.table)
     if args.limit:
         source = source.limit(args.limit)
-    if args.dedup != "none" and not args.unique_key:
-        # silently running NO dedup while the output JSON reports a
-        # dedup mode would let duplicates land with a passing audit
-        print(
-            f"error: --dedup {args.dedup} requires --unique-key",
-            file=sys.stderr,
-        )
-        return 2
     dedup_keys = tuple(args.unique_key) if args.dedup != "none" else ()
     spec = IngestSpec(
         dedup_keys=dedup_keys,

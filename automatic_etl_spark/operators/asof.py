@@ -20,7 +20,7 @@ alternative (range join / per-left-row subquery) is quadratic per key.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 _SIDE = "__asof_side"

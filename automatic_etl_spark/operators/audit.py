@@ -91,14 +91,16 @@ def grand_total(audit: DataFrame) -> DataFrame:
     A report with a ``verdict`` column rolls up its per-key verdicts:
     an ingest report's verdicts compare the expected end state with the
     sink, so a dedup-shrinking ingest is OK by design. A report without
-    one (the keyless ingest audit) rolls up its diffs."""
+    one (the keyless ingest audit) rolls up its diffs. A sum over no
+    rows is NULL and reads 0, so an empty report is ``OK`` with 0/0/0."""
     if "verdict" in audit.columns:
-        bad = F.sum((F.col("verdict") != "OK").cast("int"))
+        bad = (F.col("verdict") != "OK").cast("int")
     else:
-        bad = F.sum(F.abs(F.col("diff")))
+        bad = F.abs(F.col("diff"))
+    bad = F.coalesce(F.sum(bad), F.lit(0))
     return audit.agg(
         F.sum("src_cnt").alias("src_total"),
         F.sum("snk_cnt").alias("snk_total"),
         F.sum("diff").alias("total_diff"),
         F.when(bad == 0, F.lit("OK")).otherwise(F.lit("MISMATCH")).alias("verdict"),
-    )
+    ).na.fill(0)

@@ -17,7 +17,7 @@ tools/create_clickhouse_models.py:46-222). Spark-first mapping:
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F

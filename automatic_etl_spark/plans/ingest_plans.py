@@ -5,8 +5,6 @@ report directly from the source."""
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 
 from automatic_etl_spark.ingest import IngestSpec, ingest_table

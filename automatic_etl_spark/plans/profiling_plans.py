@@ -12,7 +12,7 @@ site + DECIMAL sums (the unigram_logprob_quality precedent).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from automatic_etl_spark.functions import text as tx

@@ -10,7 +10,6 @@ parquet-derived aggregate exactly.
 
 from __future__ import annotations
 
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession

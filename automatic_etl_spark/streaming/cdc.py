@@ -16,10 +16,10 @@ Spark-first mapping:
   via :func:`automatic_etl_spark.operators.dedup.latest_version` inside
   ``foreachBatch``
 
-Scale notes: unwrap is stateless (no shuffle); the micro-batch dedup
-shuffles on the table key only within the batch, and cross-batch
-last-writer-wins is the MERGE in the silver sink. Watermark + key
-dedup handles duplicate delivery (at-least-once Kafka, T1).
+Scale notes: unwrap is stateless (no shuffle); the silver sink runs ONE
+last-writer-wins window per micro-batch, over the raw batch unioned
+with the silver partitions it touches, and shuffles only those rows.
+Watermark + key dedup handles duplicate delivery (at-least-once, T1).
 """
 
 from __future__ import annotations
@@ -116,8 +116,8 @@ def unwrap_envelope(parsed: DataFrame, env_col: str = "_env") -> DataFrame:
 def cdc_microbatch_dedup(
     unwrapped: DataFrame, keys: list[str], version_cols: list[str | Column]
 ) -> DataFrame:
-    """T4 last-writer-wins within a micro-batch (the reference defers
-    this to ReplacingMergeTree; we do it eagerly per batch)."""
+    """T4 last-writer-wins, one row per key (the reference defers this to
+    ReplacingMergeTree; the silver sink runs it once per micro-batch)."""
     from automatic_etl_spark.operators.dedup import latest_version
 
     return latest_version(unwrapped, keys, version_cols)
@@ -147,7 +147,7 @@ def foreach_batch_upsert_partitioned(
     version_cols: list[str],
     partition_col: str,
 ):
-    """foreachBatch sink: dedup the batch, then last-writer-wins merge
+    """foreachBatch sink: last-writer-wins merge of each micro-batch
     into a partitioned parquet silver table (T6) — the one CDC sink.
 
     Parquet has no MERGE, so the merge is read-modify-overwrite, pruned
@@ -165,7 +165,8 @@ def foreach_batch_upsert_partitioned(
        from that schema still fails in ``unionByName``, so no column
        is dropped silently; the sink assumes it is silver's only
        writer,
-    3. merges last-writer-wins within them,
+    3. runs ONE last-writer-wins window over them unioned with the raw
+       batch (LWW of ``silver ∪ batch`` = LWW of ``silver ∪ LWW(batch)``),
     4. overwrites ONLY those partitions
        (``partitionOverwriteMode=dynamic``).
 
@@ -178,12 +179,6 @@ def foreach_batch_upsert_partitioned(
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         nonlocal written
         spark = batch_df.sparkSession
-        deduped = cdc_microbatch_dedup(batch_df, keys, version_cols)
-        # Touched partitions come from the RAW batch (dedup cannot add
-        # or remove a partition value — partition_col is stable per
-        # key), so the distinct is a plain aggregate; deriving it from
-        # `deduped` would execute the row_number window twice per
-        # batch.
         values = [
             r[0]
             for r in batch_df.select(partition_col).distinct().collect()
@@ -192,6 +187,7 @@ def foreach_batch_upsert_partitioned(
         has_null = len(touched) != len(values)
         if not values:
             return  # empty micro-batch
+        rows = batch_df
         if _path_exists(spark, target_path):
             # NULL partition values land in Spark's default partition
             # directory; isin() never matches NULL, so they need an
@@ -207,11 +203,8 @@ def foreach_batch_upsert_partitioned(
                 cond = cond | F.col(partition_col).isNull()
             reader = spark.read if written is None else spark.read.schema(written)
             existing = reader.parquet(target_path).filter(cond)
-            merged = cdc_microbatch_dedup(
-                existing.unionByName(deduped), keys, version_cols
-            )
-        else:
-            merged = deduped
+            rows = existing.unionByName(batch_df)
+        merged = cdc_microbatch_dedup(rows, keys, version_cols)
         # per-WRITER dynamic overwrite: mutating the session-global
         # conf here would race with any concurrent writer on the same
         # SparkSession (ingest_many runs driver threads in parallel)

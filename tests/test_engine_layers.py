@@ -480,6 +480,27 @@ def test_reconcile_counts_null_one_sided_and_mixed_type_keys(spark, ansi):
     }
 
 
+def test_grand_total_of_an_empty_audit_reads_ok(spark, tmp_path):
+    """An empty load reconciles: the rollup of a zero-row report reads
+    OK with 0/0/0, keyed or keyless: a sum over no rows is NULL, and
+    the rollup must read it as 0, not as a count of bad keys."""
+    from automatic_etl_spark.ingest import IngestSpec, ingest_table
+    from automatic_etl_spark.operators.audit import grand_total, reconcile_counts
+
+    empty = spark.createDataFrame([], "k int, v string")
+    reports = [
+        reconcile_counts(empty, empty, "k"),
+        ingest_table(
+            spark, empty, str(tmp_path / "keyed"),
+            IngestSpec(dedup_keys=("k",), version_cols=("v",)),
+        ),
+        ingest_table(spark, empty, str(tmp_path / "keyless"), IngestSpec()),
+    ]
+    for report in reports:
+        [status] = grand_total(report).collect()
+        assert tuple(status) == (0, 0, 0, "OK")
+
+
 def test_ingest_audit_retyped_key_reconciles(spark, tmp_path):
     """When clean_specs retypes the audit key (string '007' → int 7),
     the audit must compare keys in the CLEANED type: raw and cleaned
@@ -961,7 +982,7 @@ def test_schema_evolution_merge_read(spark, tmp_path):
     assert got == {1: ("a", None), 2: ("b", 99)}
 
 
-def test_cli_ingest_query_audit(spark, tmp_path, capsys):
+def test_cli_ingest_query_audit(spark, tmp_path, capsys, monkeypatch):
     import json
 
     from automatic_etl_spark import cli
@@ -1007,6 +1028,18 @@ def test_cli_ingest_query_audit(spark, tmp_path, capsys):
 
     assert cli.main(["query", "no_such_query"]) == 2
     capsys.readouterr()
+
+    # a dedup with no version and no tiebreaker has no order to keep
+    # the latest row by: rejected before Spark starts
+    from automatic_etl_spark import session
+
+    monkeypatch.setattr(session, "get_spark", lambda **_: pytest.fail("Spark started"))
+    rc = cli.main(
+        ["ingest", "--table", "events", "--target", target,
+         "--dedup", "replacing", "--unique-key", "user_id"]
+    )
+    assert rc == 2
+    assert "--version-col or --tiebreaker" in capsys.readouterr().err
 
 
 def test_orchestrator_parallel_matches_sequential():

@@ -99,9 +99,10 @@ def test_foreach_batch_upsert_partitioned_prunes(spark):
     import os
 
     target = scratch_dir("t_part_upsert") + "/silver"
+    schema = "id long, nombre string, _ts_ms long, month string, __deleted boolean"
     base = spark.createDataFrame(
-        [(1, "a1", 100, "2024-01"), (2, "b1", 100, "2024-02")],
-        "id long, nombre string, _ts_ms long, month string",
+        [(1, "a1", 100, "2024-01", False), (2, "b1", 100, "2024-02", False)],
+        schema,
     )
     apply_fn = cdc.foreach_batch_upsert_partitioned(
         target, keys=["id"], version_cols=["_ts_ms"], partition_col="month"
@@ -118,17 +119,31 @@ def test_foreach_batch_upsert_partitioned_prunes(spark):
     }
     assert jan_files and feb_files
 
-    # second batch touches ONLY February
+    # second batch touches ONLY February, with in-batch duplicates: key
+    # 2 older than silver's version and again newer, key 3 inserted and
+    # then deleted
     batch2 = spark.createDataFrame(
-        [(2, "b2", 200, "2024-02"), (3, "c1", 150, "2024-02")],
-        "id long, nombre string, _ts_ms long, month string",
+        [
+            (2, "b0", 50, "2024-02", False),
+            (2, "b2", 200, "2024-02", False),
+            (3, "c1", 150, "2024-02", False),
+            (3, "c1", 160, "2024-02", True),
+        ],
+        schema,
     )
     apply_fn(batch2, 1)
 
     state = {
-        r["id"]: r["nombre"] for r in spark.read.parquet(target).collect()
+        r["id"]: (r["nombre"], r["_ts_ms"], r["__deleted"])
+        for r in spark.read.parquet(target).collect()
     }
-    assert state == {1: "a1", 2: "b2", 3: "c1"}  # LWW merge applied
+    # one LWW pass over silver and the raw batch: one row per key, the
+    # highest version, the delete kept as a __deleted row
+    assert state == {
+        1: ("a1", 100, False),
+        2: ("b2", 200, False),
+        3: ("c1", 160, True),
+    }
 
     # January partition untouched: same files, same mtimes
     jan_after = {
@@ -183,9 +198,11 @@ def _sink_batch(spark, month, ts_ms, extra=False):
 
 def test_upsert_sink_reads_silver_with_its_written_schema(spark, monkeypatch):
     """A later batch on an existing silver table reads silver with the
-    schema of the sink's last merge write: 5 Spark jobs, where
-    inferring the schema made it 6, and the touched month is still a
-    directory-pruning PartitionFilter of the silver scan."""
+    schema of the sink's last merge write and runs one last-writer-wins
+    window over silver and the raw batch: 4 Spark jobs, where a
+    separate batch-only dedup made it 5 and inferring the schema 6. The
+    touched month is still a directory-pruning PartitionFilter of the
+    silver scan."""
     target = scratch_dir("t_part_upsert_schema") + "/silver"
     apply_fn = cdc.foreach_batch_upsert_partitioned(
         target, keys=["id"], version_cols=["_ts_ms"], partition_col="month"
@@ -211,7 +228,7 @@ def test_upsert_sink_reads_silver_with_its_written_schema(spark, monkeypatch):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 5
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 4
 
     [existing] = unions
     plan = existing._jdf.queryExecution().executedPlan().toString()
