@@ -47,17 +47,6 @@ def _decode_bytes(raw: bytes, detect: bool = True) -> str:
     return raw.decode("utf-8", errors="replace")
 
 
-def _repair_str(s: str) -> str:
-    """Round-trip repair: if the text looks like utf-8 bytes mis-read
-    as latin-1 (mojibake), re-decode it properly."""
-    try:
-        roundtrip = s.encode("latin-1").decode("utf-8")
-    except (UnicodeEncodeError, UnicodeDecodeError):
-        return s
-    # Accept only if the round trip actually removed mojibake markers.
-    return roundtrip if ("Ã" in s or "Â" in s) and len(roundtrip) < len(s) else s
-
-
 def _decode_series(series: pd.Series) -> pd.Series:
     return series.map(lambda v: None if v is None else _decode_bytes(bytes(v)))
 
@@ -66,10 +55,6 @@ def _decode_series_no_detect(series: pd.Series) -> pd.Series:
     return series.map(
         lambda v: None if v is None else _decode_bytes(bytes(v), detect=False)
     )
-
-
-def _repair_series(series: pd.Series) -> pd.Series:
-    return series.map(lambda v: None if v is None else _repair_str(v))
 
 
 # UDFs are created lazily: decorating at module scope breaks when the
@@ -90,10 +75,3 @@ def decode_binary(c: Column | str, detect: bool = True) -> Column:
         fn = _decode_series if detect else _decode_series_no_detect
         _UDF_CACHE[key] = pandas_udf(fn, "string")
     return _UDF_CACHE[key](c)
-
-
-def repair_text_encoding(c: Column | str) -> Column:
-    """str → str mojibake round-trip repair (C12's Python half)."""
-    if "repair" not in _UDF_CACHE:
-        _UDF_CACHE["repair"] = pandas_udf(_repair_series, "string")
-    return _UDF_CACHE["repair"](c)

@@ -128,6 +128,15 @@ def md5_hex(c: Column | str) -> Column:
     return F.md5(F.encode(_col(c), "UTF-8"))
 
 
+def hex_val(digit: Column) -> Column:
+    """Lowercase hex digit → 0..15 via ascii arithmetic (portable: no
+    conv()/from_hex divergence between engines; the DuckDB mirror is
+    ``plans.relational._sql_hex_val``)."""
+    return F.when(digit.between("0", "9"), F.ascii(digit) - 48).otherwise(
+        F.ascii(digit) - 87
+    )
+
+
 def doc_fingerprint(c: Column | str, length: int = 16) -> Column:
     """Content fingerprint: md5-prefix of the normalized text."""
     normalized = F.regexp_replace(F.trim(F.lower(_col(c))), r"\s+", " ")

@@ -27,6 +27,59 @@ _SIDE = "__asof_side"
 _PAYLOAD = "__asof_payload"
 
 
+def _as_of(
+    left: DataFrame,
+    right: DataFrame,
+    keys: list[str],
+    left_ts: str,
+    right_ts: str,
+    payload_prefix: str,
+    forward: bool,
+) -> DataFrame:
+    """The one as-of builder. Backward: right rows sort before left at
+    equal timestamps and ``last(payload, ignorenulls)`` scans
+    (unboundedPreceding, currentRow). Forward mirrors it: left rows
+    sort first and ``first(payload, ignorenulls)`` scans (currentRow,
+    unboundedFollowing). Either way the match is inclusive."""
+    left_side = 0 if forward else 1
+    payload_cols = [c for c in right.columns if c not in keys]
+    r = right.select(
+        *keys,
+        F.col(right_ts).alias("__ts"),
+        F.lit(1 - left_side).alias(_SIDE),
+        F.struct(*[F.col(c) for c in payload_cols]).alias(_PAYLOAD),
+    )
+    l = left.select(
+        "*",
+        F.col(left_ts).alias("__ts"),
+        F.lit(left_side).alias(_SIDE),
+        F.lit(None).cast(r.schema[_PAYLOAD].dataType).alias(_PAYLOAD),
+    )
+    unioned = l.unionByName(r, allowMissingColumns=True)
+    # (ts, side) puts a right row inside the frame of a left row with
+    # an equal timestamp (inclusive match); the payload itself is the
+    # final tiebreak so duplicate right timestamps resolve
+    # deterministically (struct ordering — fields must be orderable,
+    # i.e. no map columns).
+    payload = F.col(_PAYLOAD)
+    w = Window.partitionBy(*keys).orderBy(
+        F.col("__ts").asc(),
+        F.col(_SIDE).asc(),
+        payload.asc_nulls_last() if forward else payload.asc_nulls_first(),
+    )
+    if forward:
+        w = w.rowsBetween(Window.currentRow, Window.unboundedFollowing)
+        carried = F.first(_PAYLOAD, ignorenulls=True)
+    else:
+        w = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        carried = F.last(_PAYLOAD, ignorenulls=True)
+    matched = unioned.withColumn(_PAYLOAD, carried.over(w))
+    out = matched.filter(F.col(_SIDE) == left_side).drop(_SIDE, "__ts")
+    for c in payload_cols:
+        out = out.withColumn(f"{payload_prefix}{c}", F.col(f"{_PAYLOAD}.{c}"))
+    return out.drop(_PAYLOAD)
+
+
 def as_of_join(
     left: DataFrame,
     right: DataFrame,
@@ -37,40 +90,9 @@ def as_of_join(
 ) -> DataFrame:
     """Backward as-of join; right payload columns (everything except
     keys) come back prefixed, NULL when no right row precedes."""
-    payload_cols = [c for c in right.columns if c not in keys]
-    r = right.select(
-        *keys,
-        F.col(right_ts).alias("__ts"),
-        F.lit(0).alias(_SIDE),
-        F.struct(*[F.col(c) for c in payload_cols]).alias(_PAYLOAD),
+    return _as_of(
+        left, right, keys, left_ts, right_ts, payload_prefix, forward=False
     )
-    l = left.select(
-        "*",
-        F.col(left_ts).alias("__ts"),
-        F.lit(1).alias(_SIDE),
-        F.lit(None).cast(r.schema[_PAYLOAD].dataType).alias(_PAYLOAD),
-    )
-    unioned = l.unionByName(r, allowMissingColumns=True)
-    # (ts, side) puts right rows before left at equal timestamps
-    # (inclusive match); the payload itself is the final tiebreak so
-    # duplicate right timestamps resolve deterministically (struct
-    # ordering — fields must be orderable, i.e. no map columns).
-    w = (
-        Window.partitionBy(*keys)
-        .orderBy(
-            F.col("__ts").asc(),
-            F.col(_SIDE).asc(),
-            F.col(_PAYLOAD).asc_nulls_first(),
-        )
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    matched = unioned.withColumn(
-        _PAYLOAD, F.last(_PAYLOAD, ignorenulls=True).over(w)
-    )
-    out = matched.filter(F.col(_SIDE) == 1).drop(_SIDE, "__ts")
-    for c in payload_cols:
-        out = out.withColumn(f"{payload_prefix}{c}", F.col(f"{_PAYLOAD}.{c}"))
-    return out.drop(_PAYLOAD)
 
 
 def as_of_join_forward(
@@ -89,36 +111,9 @@ def as_of_join_forward(
     timestamps (inclusive match) and ``first(payload, ignorenulls)``
     scans the frame (currentRow, unboundedFollowing). Same scale
     shape: one hash partition on the key + per-partition sort."""
-    payload_cols = [c for c in right.columns if c not in keys]
-    r = right.select(
-        *keys,
-        F.col(right_ts).alias("__ts"),
-        F.lit(1).alias(_SIDE),
-        F.struct(*[F.col(c) for c in payload_cols]).alias(_PAYLOAD),
+    return _as_of(
+        left, right, keys, left_ts, right_ts, payload_prefix, forward=True
     )
-    l = left.select(
-        "*",
-        F.col(left_ts).alias("__ts"),
-        F.lit(0).alias(_SIDE),
-        F.lit(None).cast(r.schema[_PAYLOAD].dataType).alias(_PAYLOAD),
-    )
-    unioned = l.unionByName(r, allowMissingColumns=True)
-    w = (
-        Window.partitionBy(*keys)
-        .orderBy(
-            F.col("__ts").asc(),
-            F.col(_SIDE).asc(),
-            F.col(_PAYLOAD).asc_nulls_last(),
-        )
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    )
-    matched = unioned.withColumn(
-        _PAYLOAD, F.first(_PAYLOAD, ignorenulls=True).over(w)
-    )
-    out = matched.filter(F.col(_SIDE) == 0).drop(_SIDE, "__ts")
-    for c in payload_cols:
-        out = out.withColumn(f"{payload_prefix}{c}", F.col(f"{_PAYLOAD}.{c}"))
-    return out.drop(_PAYLOAD)
 
 
 def as_of_join_tolerance(

@@ -21,17 +21,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from automatic_etl_spark.functions.text import md5_hex
+from automatic_etl_spark.functions.text import hex_val, md5_hex
 
 DEPTH = 4
 WIDTH = 256  # two hex digits
-
-
-def _hex_val(digit: Column) -> Column:
-    """Lowercase hex digit → 0..15 via ascii arithmetic (portable)."""
-    return F.when(digit.between("0", "9"), F.ascii(digit) - 48).otherwise(
-        F.ascii(digit) - 87
-    )
 
 
 def bucket_of(key: Column | str, row: int, width: int = WIDTH) -> Column:
@@ -40,7 +33,7 @@ def bucket_of(key: Column | str, row: int, width: int = WIDTH) -> Column:
     layout (and its SQL oracle) is unchanged."""
     col = F.col(key) if isinstance(key, str) else key
     h = md5_hex(F.concat(F.lit(f"{row}|"), col.cast("string")))
-    v = _hex_val(F.substring(h, 1, 1)) * 16 + _hex_val(F.substring(h, 2, 1))
+    v = hex_val(F.substring(h, 1, 1)) * 16 + hex_val(F.substring(h, 2, 1))
     return v if width == WIDTH else v % width
 
 

@@ -68,10 +68,11 @@ def minhash_signatures(shingles_df: DataFrame, num_hashes: int = 8) -> DataFrame
     the per-row md5×K hashing runs inside whole-stage codegen, and the
     exchange carries ~1 row per doc, not doc×shingle — explode keeps a
     doc's shingles in its parent's partition, so the partial aggregate
-    finishes each doc before the shuffle. The honest-scale A/B against
-    :func:`minhash_signatures_wide` (10×-scaled corpus, fresh JVMs):
-    5.8 s vs 19.2 s at 10×, 1.0 s vs 2.4 s warm at sf0.1 — the wide
-    form's higher-order ``transform`` evaluates its lambda on Spark's
+    finishes each doc before the shuffle. Against a map-side form
+    (``array_min`` over a per-row ``transform`` of the shingle array,
+    no explode and no groupBy; 10×-scaled corpus, fresh JVMs) it ran
+    5.8 s vs 19.2 s at 10× and 1.0 s vs 2.4 s warm at sf0.1 — the
+    higher-order ``transform`` evaluates its lambda on Spark's
     interpreted path per array element.
     """
     aggs = [
@@ -79,56 +80,6 @@ def minhash_signatures(shingles_df: DataFrame, num_hashes: int = 8) -> DataFrame
         for k in range(num_hashes)
     ]
     return shingles_df.groupBy("doc_id").agg(*aggs)
-
-
-def minhash_signatures_wide(
-    docs: DataFrame,
-    num_hashes: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-) -> DataFrame:
-    """MinHash signatures computed entirely MAP-SIDE: ``array_min``
-    over per-row transforms of the shingle array, no explode and no
-    groupBy. Value-identical to :func:`minhash_signatures` over
-    :func:`shingle_rows` (min is duplicate-insensitive and
-    lexicographic min over fixed-width hex equals numeric min). Docs
-    with fewer than ``n`` tokens yield no signature row (same
-    visibility contract as the row form).
-
-    NOT the default (r10 reversal): the higher-order ``transform``
-    lambda is evaluated on Spark's interpreted expression path per
-    array element, which loses to the row form's codegen'd hashing by
-    2.4× warm at sf0.1 and 3.3× at the 10×-scaled corpus — and the
-    shuffle the wide form avoids is only ~1 row/doc anyway (explode
-    preserves partitioning, so the groupBy's map-side partial mins
-    finish each doc before the exchange). The r8 A/B that picked this
-    form for single-consumer fronts ran on the stress harness's
-    constant-corpus bug (see tools/scale_stress.py DOC_SHIFT). Kept as
-    the zero-exchange alternative for strict-map-only contexts (e.g.
-    inside a streaming micro-batch where an extra exchange changes
-    checkpoint shape); batch LSH fronts should use the row form and
-    multi-consumer shapes should materialize the signature table
-    (minhash_lsh_matview)."""
-
-    def _minhash(sh: Column, k: int) -> Column:
-        return F.array_min(
-            F.transform(
-                sh,
-                lambda s: F.substring(
-                    tx.md5_hex(F.concat(F.lit(f"{k}|"), s)), 1, 8
-                ),
-            )
-        )
-
-    sh = tx.shingles(text_col, n)
-    return docs.select(
-        F.col(id_col).alias("doc_id"),
-        sh.alias("__sh"),
-    ).filter(F.size("__sh") > 0).select(
-        "doc_id",
-        *[_minhash(F.col("__sh"), k).alias(f"h{k}") for k in range(num_hashes)],
-    )
 
 
 def lsh_band_keys(
@@ -281,14 +232,6 @@ def jaccard_pairs(
     )
 
 
-def _hex_digit_parity(digit: Column) -> Column:
-    """Parity of a lowercase hex digit's value, via ascii arithmetic
-    (portable: no conv()/from_hex divergence between engines)."""
-    return F.when(
-        digit.between("0", "9"), (F.ascii(digit) - 48) % 2
-    ).otherwise((F.ascii(digit) - 87) % 2)
-
-
 def simhash16(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
@@ -304,7 +247,7 @@ def simhash16(
     h = tx.md5_hex(F.col("tok"))
     votes = [
         F.sum(
-            F.when(_hex_digit_parity(F.substring(h, d, 1)) == 1, 1).otherwise(-1)
+            F.when(tx.hex_val(F.substring(h, d, 1)) % 2 == 1, 1).otherwise(-1)
         ).alias(f"v{d}")
         for d in range(1, 17)
     ]

@@ -16,14 +16,8 @@ from automatic_etl_spark.operators.multimodal import (
     make_blob_table,
 )
 from automatic_etl_spark.plans.registry import register
+from automatic_etl_spark.plans.relational import _sql_hex_val
 from automatic_etl_spark.sources.parquet import table
-
-
-def _sql_hexval(digit: str) -> str:
-    return (
-        f"CASE WHEN {digit} BETWEEN '0' AND '9' THEN ascii({digit}) - 48 "
-        f"ELSE ascii({digit}) - 87 END"
-    )
 
 
 @register(
@@ -33,8 +27,8 @@ def _sql_hexval(digit: str) -> str:
             SELECT doc_id,
                    'txt' AS fmt,
                    octet_length(encode(text)) AS n_bytes,
-                   64 + {_sql_hexval("substr(md5(text), 1, 1)")} * 8 AS fake_width,
-                   64 + {_sql_hexval("substr(md5(text), 2, 1)")} * 8 AS fake_height,
+                   64 + {_sql_hex_val("substr(md5(text), 1, 1)")} * 8 AS fake_width,
+                   64 + {_sql_hex_val("substr(md5(text), 2, 1)")} * 8 AS fake_height,
                    md5(text) AS payload_md5
             FROM documents
         )
@@ -66,8 +60,8 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
             SELECT doc_id,
                    'txt' AS fmt,
                    octet_length(encode(text)) AS n_bytes,
-                   64 + {_sql_hexval("substr(md5(text), 1, 1)")} * 8 AS fake_width,
-                   64 + {_sql_hexval("substr(md5(text), 2, 1)")} * 8 AS fake_height,
+                   64 + {_sql_hex_val("substr(md5(text), 1, 1)")} * 8 AS fake_width,
+                   64 + {_sql_hex_val("substr(md5(text), 2, 1)")} * 8 AS fake_height,
                    md5(text) AS payload_md5
             FROM documents
         )
@@ -105,8 +99,8 @@ def multimodal_features_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
         WITH dims AS (
             SELECT doc_id,
-                   64 + {_sql_hexval("substr(md5(text), 1, 1)")} * 8 AS w,
-                   64 + {_sql_hexval("substr(md5(text), 2, 1)")} * 8 AS h
+                   64 + {_sql_hex_val("substr(md5(text), 1, 1)")} * 8 AS w,
+                   64 + {_sql_hex_val("substr(md5(text), 2, 1)")} * 8 AS h
             FROM documents
         ),
         resized AS (

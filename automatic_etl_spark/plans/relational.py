@@ -80,6 +80,15 @@ def _sql_qround(expr: str, scale: int = 6) -> str:
     return f"floor(({expr}) * 1e{scale} + 0.5) / 1e{scale}"
 
 
+def _sql_hex_val(digit: str) -> str:
+    """DuckDB mirror of :func:`functions.text.hex_val`: a lowercase
+    hex digit → 0..15 via ascii arithmetic."""
+    return (
+        f"CASE WHEN {digit} BETWEEN '0' AND '9' THEN ascii({digit}) - 48 "
+        f"ELSE ascii({digit}) - 87 END"
+    )
+
+
 def _sql_dsum(expr: str, alias: str, scale: int = 2) -> str:
     """DuckDB mirror of :func:`dsum` — single-source scale constant
     (ADVICE r9: hand-duplicated multiplier/divisor pairs can drift;

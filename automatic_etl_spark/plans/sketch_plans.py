@@ -10,16 +10,10 @@ from pyspark.sql import functions as F
 
 from automatic_etl_spark.operators import sketch as sk
 from automatic_etl_spark.plans.registry import register
+from automatic_etl_spark.plans.relational import _sql_hex_val
 from automatic_etl_spark.sources.parquet import table
 
 TOP = 10
-
-
-def _sql_hex_val(digit: str) -> str:
-    return (
-        f"CASE WHEN {digit} BETWEEN '0' AND '9' THEN ascii({digit}) - 48 "
-        f"ELSE ascii({digit}) - 87 END"
-    )
 
 
 def _sql_bucket(key_expr: str, row: int) -> str:

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from automatic_etl_spark.functions import text as tx
 from automatic_etl_spark.plans.dedup_plans import PLANT_OFFSET
 from automatic_etl_spark.plans.registry import register
-from automatic_etl_spark.plans.relational import qround
+from automatic_etl_spark.plans.relational import _sql_hex_val, qround
 from automatic_etl_spark.sources.parquet import table
 
 # --- SQL mirrors of functions/text.py ---------------------------------------
@@ -286,13 +286,6 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- stratified train/valid/test split ---------------------------------------
 
 
-def _sql_hex_val(digit: str) -> str:
-    return (
-        f"CASE WHEN {digit} BETWEEN '0' AND '9' THEN ascii({digit}) - 48 "
-        f"ELSE ascii({digit}) - 87 END"
-    )
-
-
 _SQL_SPLIT_BUCKET = (
     "(("
     + _sql_hex_val("substr(md5('split|' || CAST(doc_id AS VARCHAR)), 1, 1)")
@@ -326,13 +319,11 @@ def stratified_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     falls out per language because the hash is independent of lang.
     Scale shape: pure narrow map + one aggregation; the split column
     also works as a partition key for the export write."""
-    from automatic_etl_spark.operators import sketch as sk
-
     docs = table(spark, sf_dir, "documents", fan_out=False)
     h = tx.md5_hex(F.concat(F.lit("split|"), F.col("doc_id").cast("string")))
     bucket = (
-        sk._hex_val(F.substring(h, 1, 1)) * 16
-        + sk._hex_val(F.substring(h, 2, 1))
+        tx.hex_val(F.substring(h, 1, 1)) * 16
+        + tx.hex_val(F.substring(h, 2, 1))
     ) % 10
     split = (
         F.when(bucket < 8, "train").when(bucket == 8, "valid").otherwise("test")

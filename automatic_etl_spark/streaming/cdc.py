@@ -128,9 +128,13 @@ def _path_exists(spark, path: str) -> bool:
     Hadoop FS API — a driver-local os.path check is always False on
     HDFS/S3, which would make the upsert sink silently treat an
     EXISTING silver table as absent and destroy its rows with a
-    batch-only overwrite. An existing but EMPTY directory (a
-    pre-created target) counts as absent: there is nothing to merge
-    and reading it cannot infer a schema. Existence is probed
+    batch-only overwrite. A directory with no entry Spark's file index
+    reads counts as absent: there is nothing to merge and reading it
+    cannot infer a schema. That covers a pre-created empty target and
+    the leftovers of a crashed first write (``.spark-staging-*``,
+    ``_temporary``, a lone ``_SUCCESS``). Like the file index, an entry
+    is skipped when its name starts with ``.``, or with ``_`` and holds
+    no ``=`` (``_p=1`` is a partition directory). Existence is probed
     explicitly, never inferred from a broad except around the read: a
     schema-evolution or transient read error taken for "absent" would
     overwrite the committed silver state with one batch. Real errors
@@ -138,7 +142,13 @@ def _path_exists(spark, path: str) -> bool:
     jvm = spark._jvm
     hpath = jvm.org.apache.hadoop.fs.Path(path)
     fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs.exists(hpath) and len(fs.listStatus(hpath)) > 0
+    if not fs.exists(hpath):
+        return False
+    names = (st.getPath().getName() for st in fs.listStatus(hpath))
+    return any(
+        not (n.startswith(".") or (n.startswith("_") and "=" not in n))
+        for n in names
+    )
 
 
 def foreach_batch_upsert_partitioned(

@@ -61,57 +61,3 @@ def running_user_totals(stream: DataFrame, key: str = "user_id") -> DataFrame:
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
-
-def running_user_totals_tws(
-    stream: DataFrame, key: str = "user_id"
-) -> DataFrame:
-    """The same running totals on Spark 4's ``transformWithState``
-    API (SPARK-46815): a ``StatefulProcessor`` with a typed
-    ``ValueState`` instead of ``applyInPandasWithState``'s positional
-    GroupState tuple. This is the forward path — composable named
-    state variables (value/list/map), timers, TTL — and what new
-    stateful operators should target; the legacy wrapper above stays
-    for parity. Requires the RocksDB state store provider, AND a
-    Python environment with ``google.protobuf`` — TWS ships its state
-    protocol over protobuf and its Python runner dies without it
-    (verified in this sandbox: STREAMING_PYTHON_RUNNER_INITIALIZATION
-    _FAILURE, ImportError on google.protobuf; no package installation
-    available). tests/test_streaming.py gates the live execution on
-    that import, chardet-style; the legacy applyInPandasWithState
-    path carries the driver-checked oracle either way."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    key_name = key  # handleInputRows' own `key` arg shadows the param
-
-    class _RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState("totals", STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            cnt, cents = (
-                self._totals.get() if self._totals.exists() else (0, 0)
-            )
-            for pdf in rows:
-                cnt += len(pdf)
-                cents += int(pdf["cents"].sum())
-            self._totals.update((cnt, cents))
-            yield pd.DataFrame(
-                {
-                    key_name: [key[0]],
-                    "n_events": [cnt],
-                    "cents_total": [cents],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return stream.groupBy(key).transformWithStateInPandas(
-        statefulProcessor=_RunningTotals(),
-        outputStructType=f"{key} long, {_OUTPUT_FIELDS}",
-        outputMode="Update",
-        timeMode="None",
-    )

@@ -124,14 +124,6 @@ def test_fill_not_null_default(spark):
     assert [(r.s, r.n) for r in out] == [("N/A", 0), ("x", 5)]
 
 
-def test_repair_text_encoding_udf(spark):
-    from automatic_etl_spark.functions.encoding import repair_text_encoding
-
-    df = spark.createDataFrame([("ActualizaciÃ³n",), ("ya bien",)], "v string")
-    vals = [r.out for r in df.select(repair_text_encoding("v").alias("out")).collect()]
-    assert vals == ["Actualización", "ya bien"]
-
-
 def test_decode_binary_udf(spark):
     from automatic_etl_spark.functions.encoding import decode_binary
 

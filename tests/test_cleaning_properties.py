@@ -520,14 +520,13 @@ def test_split_bucket_matches_python_model(spark, ids, parts):
     import hashlib
 
     from automatic_etl_spark.functions import text as tx
-    from automatic_etl_spark.operators import sketch as sk
 
     df = spark.createDataFrame([(i,) for i in ids], "doc_id long").repartition(
         parts
     )
     h = tx.md5_hex(F.concat(F.lit("split|"), F.col("doc_id").cast("string")))
     bucket = (
-        sk._hex_val(F.substring(h, 1, 1)) * 16 + sk._hex_val(F.substring(h, 2, 1))
+        tx.hex_val(F.substring(h, 1, 1)) * 16 + tx.hex_val(F.substring(h, 2, 1))
     ) % 10
     got = {
         r["doc_id"]: r["b"] for r in df.select("doc_id", bucket.alias("b")).collect()

@@ -1,8 +1,8 @@
 """Environment-waiver probes as a committed test (VERDICT r8 #3).
 
-Four capabilities are implemented but environment-blocked (COVERAGE.md
-§2.1 waivers): live Kafka wire, live MySQL dialect, Avro DataSource,
-and a live transformWithState run. The standing contract is that the
+Four capabilities are environment-blocked (COVERAGE.md §2.1 waivers):
+live Kafka wire, live MySQL dialect, Avro DataSource, and a live
+transformWithState run. The standing contract is that the
 round ANY dependency appears, converting its waiver to a live test is
 that round's FIRST task. Through round 8 the re-probe was a manual
 habit re-dated in COVERAGE each round; this module makes the suite
@@ -64,16 +64,17 @@ def _importable(mod: str) -> bool:
 
 
 def test_protobuf_waiver_transform_with_state():
-    """transformWithState's Python runner speaks protobuf; semantics
-    are covered via applyInPandasWithState (stateful_running_totals)
-    while google.protobuf is absent."""
+    """transformWithState's Python runner speaks protobuf; running
+    totals run on applyInPandasWithState (stateful_running_totals), and
+    no transformWithState variant ships while google.protobuf is
+    absent."""
     if not _importable("google.protobuf"):
         pytest.skip("google.protobuf not importable — waiver stands")
     pytest.fail(
-        "waiver void — google.protobuf is importable: convert the "
-        "transformWithState parity unit (streaming/stateful.py, "
-        "test_tws_running_totals_matches_legacy_state_api) to an "
-        "unconditional live test and update COVERAGE.md §2.1"
+        "waiver void — google.protobuf is importable: a transformWithState "
+        "running-totals operator can now run; add it with an "
+        "unconditional live parity test against running_user_totals "
+        "and update COVERAGE.md §2.1"
     )
 
 

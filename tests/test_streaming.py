@@ -364,76 +364,6 @@ def test_dq_gate_rejects_budget_for_unknown_check(spark):
         )
 
 
-def test_tws_running_totals_matches_legacy_state_api(spark, sf_dir):
-    """transformWithState vs applyInPandasWithState: same per-key
-    running totals. TWS's Python runner needs google.protobuf, which
-    this sandbox lacks — gated like the chardet encoding unit; runs
-    for real wherever protobuf exists."""
-    import os
-    import uuid
-
-    import pytest
-
-    pytest.importorskip("google.protobuf")
-
-    from pyspark.sql import Window
-
-    from automatic_etl_spark.sources.parquet import table as t
-    from automatic_etl_spark.streaming.stateful import (
-        running_user_totals,
-        running_user_totals_tws,
-    )
-
-    events = t(spark, sf_dir, "events").select(
-        "user_id", F.floor(F.col("value") * 100).alias("cents")
-    )
-    stage = scratch_dir("t_tws_parity")
-    data_dir = os.path.join(stage, "data")
-    events.coalesce(2).write.mode("overwrite").parquet(data_dir)
-
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    rocksdb = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    )
-
-    def run(factory):
-        stream = (
-            spark.readStream.schema("user_id long, cents long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(data_dir)
-        )
-        name = f"tws_par_{uuid.uuid4().hex[:8]}"
-        q = (
-            factory(stream)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .option(
-                "checkpointLocation", scratch_dir("t_tws_par_ck")
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
-        return sorted(
-            map(
-                tuple,
-                spark.table(name)
-                .withColumn("rn", F.row_number().over(w))
-                .filter(F.col("rn") == 1)
-                .drop("rn")
-                .collect(),
-            )
-        )
-
-    with session_conf(spark, {provider_key: rocksdb}):
-        via_tws = run(running_user_totals_tws)
-        via_legacy = run(running_user_totals)
-    assert via_tws == via_legacy
-
-
 def test_streaming_observe_metrics_reach_listener(spark):
     """Streaming observability: df.observe(...) metrics must surface
     per micro-batch in StreamingQueryProgress.observedMetrics — the
@@ -641,3 +571,36 @@ def test_upsert_path_probe_semantics(spark, tmp_path):
     written = str(tmp_path / "t")
     spark.range(3).write.parquet(written)
     assert _path_exists(spark, written)
+
+
+def test_upsert_path_probe_skips_hidden_entries(spark, tmp_path):
+    """A silver directory left by a crashed first write holds only
+    entries Spark's file index skips (``.spark-staging-*``,
+    ``_SUCCESS``): it counts as absent, so the first batch writes
+    silver equal to the batch instead of failing every replay on an
+    uninferable schema. A ``_p=1`` partition directory still counts."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from automatic_etl_spark.streaming.cdc import _path_exists
+
+    target = tmp_path / "silver"
+    staged = target / ".spark-staging-abc" / "month=2024-01"
+    staged.mkdir(parents=True)
+    pq.write_table(pa.table({"id": [1]}), str(staged / "part-0.parquet"))
+    (target / "_SUCCESS").write_bytes(b"")
+    assert not _path_exists(spark, str(target))
+
+    apply_fn = cdc.foreach_batch_upsert_partitioned(
+        str(target), keys=["id"], version_cols=["_ts_ms"], partition_col="month"
+    )
+    batch = _sink_batch(spark, "2024-01", 100)
+    apply_fn(batch, 0)
+    silver = spark.read.parquet(str(target)).select(*batch.columns)
+    assert sorted(map(tuple, silver.collect())) == sorted(
+        map(tuple, batch.collect())
+    )
+
+    partitioned = tmp_path / "underscore_partition"
+    spark.range(1).write.parquet(str(partitioned / "_p=1"))
+    assert _path_exists(spark, str(partitioned))

@@ -237,33 +237,3 @@ def test_minhash_calibration_buckets_bounded(spark):
     assert all(0 <= b < ERR_BUCKETS for b in buckets)
     assert 0 in buckets  # planted dups estimate ≈ exact
     assert all(r.cnt >= 1 for r in rows)
-
-
-@PROP
-@given(
-    seed=st.integers(min_value=0, max_value=10_000),
-    k=st.sampled_from([1, 4, 8]),
-)
-def test_minhash_wide_matches_row_form(spark, seed, k):
-    """minhash_signatures_wide (map-side, shuffle-free) must produce
-    BIT-IDENTICAL signatures to the explode+groupBy row form on random
-    corpora — including short docs (< n tokens), which both forms must
-    omit, and duplicate shingles, which min must ignore (r8: the wide
-    form replaced the row form on single-consumer LSH fronts)."""
-    from automatic_etl_spark.operators import text_dedup as td
-
-    rng = random.Random(seed)
-    vocab = ["alpha", "beta", "gamma", "delta", "eps", "zeta"]
-    rows = [
-        (i, " ".join(rng.choice(vocab) for _ in range(rng.randrange(0, 12))))
-        for i in range(30)
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    wide = {
-        tuple(r) for r in td.minhash_signatures_wide(docs, k).collect()
-    }
-    row_form = {
-        tuple(r)
-        for r in td.minhash_signatures(td.shingle_rows(docs), k).collect()
-    }
-    assert wide == row_form

@@ -55,10 +55,10 @@ def main() -> None:
 
     t0 = time.monotonic()
     corpus = _chain_corpus(spark, sf_dir).localCheckpoint(eager=True)
-    # mirrors the r8 production front: map-side wide signatures (no
-    # doc-shingle shuffle); shingle rows are built only for the
-    # Jaccard-verify stage below
-    signatures = td.minhash_signatures_wide(corpus, NUM_HASHES)
+    # the production front: row-form signatures over shingle rows,
+    # which the Jaccard-verify stage below reuses
+    sh = td.shingle_rows(corpus)
+    signatures = td.minhash_signatures(sh, NUM_HASHES)
     candidates = td.lsh_candidate_pairs(
         signatures, BANDS, ROWS_PER_BAND
     ).localCheckpoint(eager=True)
@@ -66,7 +66,6 @@ def main() -> None:
     out["lsh_front_sec"] = round(time.monotonic() - t0, 2)
 
     t0 = time.monotonic()
-    sh = td.shingle_rows(corpus)
     edges = (
         td.jaccard_pairs(sh, candidates=candidates)
         .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
